@@ -38,36 +38,24 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 def word_shingles(col: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a text column (native SQL:
-    split → transform(sequence) → slice/concat → dedup)."""
-    words = F.split(col, " ")
-    n_sh = F.greatest(F.size(words) - F.lit(n - 1), F.lit(1))
+    split → transform(sequence) → slice/concat → dedup). The word
+    array is bound once per row as the lambda variable of an outer
+    one-element ``transform`` (then ``flatten``); referencing the
+    ``split`` inside the shingle lambda would re-split the whole text
+    for every shingle — quadratic in document length."""
     return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n_sh),
-            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
+        F.flatten(
+            F.transform(
+                F.array(F.split(col, " ")),
+                lambda words: F.transform(
+                    F.sequence(
+                        F.lit(1), F.greatest(F.size(words) - F.lit(n - 1), F.lit(1))
+                    ),
+                    lambda i: F.concat_ws(" ", F.slice(words, i, n)),
+                ),
+            )
         )
     )
-
-
-def _seeded_min_hash(shingles: Column, prefix: str) -> Column:
-    # NB: the transform lambda must stay single-arg — a second
-    # parameter (even a defaulted one) makes PySpark treat it as an
-    # (element, index) lambda and bind the index Column to it.
-    return F.array_min(
-        F.transform(shingles, lambda s: F.md5(F.concat(F.lit(prefix), s)))
-    )
-
-
-def minhash_signature(shingles: Column, num_hashes: int, seed: str = "mh") -> list[Column]:
-    """k min-hashes of a shingle set: min over md5(seed|i|shingle).
-
-    Lexicographic min of hex digests ≡ min of 128-bit ints — portable
-    across engines without bigint hex parsing.
-    """
-    return [
-        _seeded_min_hash(shingles, f"{seed}|{i}|").alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
 
 
 def band_table(
@@ -647,7 +635,11 @@ def simhash16(col: Column, seed: str = "sh") -> Column:
     words = F.split(col, " ")
 
     def vote_at(j: int) -> Column:
-        # two-arg merge lambda only — see _seeded_min_hash arity note
+        # two-arg merge lambda only. PySpark binds lambda arguments by
+        # parameter count, so an extra parameter (even a defaulted one)
+        # changes the binding: on a ``transform`` lambda, a second
+        # parameter makes it an (element, index) lambda and binds the
+        # index Column to it.
         return F.aggregate(
             words,
             F.lit(0),

@@ -26,7 +26,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, FloatType
 
@@ -38,19 +38,29 @@ def embed_deterministic(col: Column, dim: int = DEFAULT_DIM, seed: str = "emb") 
 
     Component i = (first-15-hex-digits of md5(seed|i|text) scaled to
     [-1, 1]). Deterministic across engines and runs; cheap enough to
-    run at 100 TB (k md5 calls per row, all codegen'd).
+    run at 100 TB (k md5 calls per row). One ``transform`` over
+    ``sequence(0, dim-1)``, so the expression (and the driver round
+    trips that build it) does not grow with ``dim``.
     """
-    comps = [
-        (
-            F.conv(F.substring(F.md5(F.concat(F.lit(f"{seed}|{i}|"), col)), 1, 15), 16, 10)
-            .cast("double")
+    if dim < 1:
+        raise ValueError(f"embedding dim must be >= 1, got {dim}")
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda i: (
+            F.conv(
+                F.substring(
+                    F.md5(F.concat(F.lit(f"{seed}|"), i.cast("string"), F.lit("|"), col)),
+                    1,
+                    15,
+                ),
+                16,
+                10,
+            ).cast("double")
             / F.lit(float(16**15 - 1))
             * F.lit(2.0)
             - F.lit(1.0)
-        ).cast("float")
-        for i in range(dim)
-    ]
-    return F.array(*comps)
+        ).cast("float"),
+    )
 
 
 # ------------------------------------------------------- pandas-UDF path
@@ -106,19 +116,6 @@ def make_embed_udf(dim: int = DEFAULT_DIM):
             yield pd.Series(list(mat))
 
     return embed
-
-
-def embed_documents(df: DataFrame, text_col: str, dim: int = DEFAULT_DIM,
-                    deterministic: bool = True) -> DataFrame:
-    """Attach an ``embedding ARRAY<FLOAT>`` column.
-
-    ``deterministic=True`` (default, test path) uses the pure-SQL
-    projection; ``False`` routes through the pandas UDF (real model if
-    available, vectorized fallback otherwise).
-    """
-    if deterministic:
-        return df.withColumn("embedding", embed_deterministic(F.col(text_col), dim))
-    return df.withColumn("embedding", make_embed_udf(dim)(F.col(text_col)))
 
 
 # --------------------------------------------- remote-service path (r09)

@@ -233,6 +233,8 @@ def png_decode(
                 if len(body) < 13:  # truncated header is corrupt data, not an error
                     return None
                 w, h = struct.unpack(">II", body[:8])
+                if w < 1 or h < 1:
+                    return None  # zero width/height is invalid (spec)
                 depth, color_type, comp, filt, interlace = body[8:13]
                 if depth not in (1, 2, 4, 8, 16) or comp or filt or interlace > 1:
                     return None
@@ -667,7 +669,7 @@ def gif_decode(
         if i + 10 > len(b):
             return None
         fw, fh = struct.unpack("<HH", b[i + 5 : i + 9])
-        if fw * fh * 3 > max_pixel_bytes:
+        if fw < 1 or fh < 1 or fw * fh * 3 > max_pixel_bytes:
             return None
         lflags = b[i + 9]
         i += 10

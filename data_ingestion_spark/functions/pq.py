@@ -109,6 +109,7 @@ from .similarity import (
     brute_force_topk,
     index_current_path,
     resolve_version_dir,
+    vector_literal,
 )
 
 DEFAULT_M = 8
@@ -434,7 +435,7 @@ class IvfPqStore:
             # here rather than trip ANSI divide-by-zero in the re-rank
             .filter(dot_product(F.col("vec"), F.col("vec")) > 0)
         )
-        qcol = F.array(*[F.lit(float(x)) for x in qv])
+        qcol = vector_literal(qv)
         out = brute_force_topk(raw, qcol, k, "id", "vec")
         return out.select(
             F.col("id").alias(self.meta["id_col"]), "score"
@@ -1096,6 +1097,8 @@ def maybe_compact_ivfpq_store(
     root-level ``_last_batch_id`` replay marker is untouched by
     design (the root never moves). Returns True when a fold
     happened."""
+    if max_segments < 1:
+        raise ValueError(f"max_segments must be >= 1, got {max_segments}")
     if index_current_path(root) is None:
         return False
     store = IvfPqStore(spark, root)

@@ -24,6 +24,21 @@ import warnings
 from pyspark.sql import Column, DataFrame, functions as F
 
 
+def vector_literal(values) -> Column:
+    """ARRAY<DOUBLE> literal of ``values`` built from one string
+    literal: ``split(lit("v0,v1,..."), ",")`` cast to doubles, which
+    Catalyst constant-folds back into one array literal. ``repr`` of a
+    float is its shortest round-trip form and Spark parses it
+    correctly rounded, so every element is bit-identical to
+    ``F.lit(float(v))`` (inf and nan included; the JVM keeps one
+    canonical nan either way). It costs a constant number of py4j
+    round trips; ``F.array`` of per-element literals costs several
+    per element."""
+    return F.split(F.lit(",".join(repr(float(v)) for v in values)), ",").cast(
+        "array<double>"
+    )
+
+
 def dot_product(x: Column, y: Column) -> Column:
     """Float64 dot product of two ARRAY<FLOAT/DOUBLE> columns —
     zip_with products, aggregate with a DOUBLE accumulator (explicit
@@ -366,7 +381,7 @@ def kmeans_ivf_search(
     centers = model.clusterCenters()
     order = sorted(range(len(centers)), key=lambda i: float(np.linalg.norm(centers[i] - q)))
     probe_cells = order[:n_probe]
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
+    qv = vector_literal(query_vec)
     cand = assigned.filter(F.col("ivf_cell").isin(probe_cells))
     return brute_force_topk(cand, qv, k, id_col, vec_col)
 
@@ -721,7 +736,7 @@ class AnnStore:
         if where is not None:
             cand = cand.filter(where)
         cand = cand.select(self.id_col, self.vec_col).distinct()
-        qcol = F.array(*[F.lit(float(x)) for x in qv])
+        qcol = vector_literal(qv)
         return brute_force_topk(cand, qcol, k, self.id_col, self.vec_col)
 
     def _batch_assignments(
@@ -934,8 +949,8 @@ class AnnStore:
         Fixed-order float expressions, identical on every executor."""
         mins = quant["mins"]
         widths = [mx - mn for mn, mx in zip(mins, quant["maxs"])]
-        mn_arr = F.array(*[F.lit(float(m)) for m in mins])
-        w_arr = F.array(*[F.lit(float(w)) for w in widths])
+        mn_arr = vector_literal(mins)
+        w_arr = vector_literal(widths)
 
         def enc(vec: Column) -> Column:
             return F.transform(
@@ -1073,7 +1088,7 @@ class AnnStore:
                 "(open it via AnnStore.open to restore bounds)"
             )
         pairs = self._probe_pairs(qv, extra_flips)
-        qcol = F.array(*[F.lit(float(x)) for x in qv])
+        qcol = vector_literal(qv)
         cand = self._quant_candidates(pairs)
         if prefilter_m is not None:
             cand = self._quant_prefilter(cand, qcol, prefilter_m)
@@ -2828,7 +2843,7 @@ class SegmentedAnnStore(AnnStore):
                 "probe/probe_batch, not probe_quantized"
             )
         pairs = self._probe_pairs(qv, extra_flips)
-        qcol = F.array(*[F.lit(float(x)) for x in qv])
+        qcol = vector_literal(qv)
         sts = {
             i: AnnStore.open(self.spark, _ann_seg_data_dir(self.seg_paths[i]))
             for i in range(len(self.seg_paths))

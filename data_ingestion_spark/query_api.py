@@ -28,7 +28,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.embedding import embed_deterministic
-from .functions.similarity import brute_force_topk, cosine
+from .functions.similarity import brute_force_topk, cosine, vector_literal
 from .sources.sinks import ParquetVectorStore
 
 
@@ -99,7 +99,7 @@ class EngineQuery:
         """Q:167-176 — near_vector top-k (k=5 default per Q:174)."""
         self._require(index_name)
         chunks = self.store.read_collection(index_name)
-        qv = F.array(*[F.lit(float(x)) for x in vector])
+        qv = vector_literal(vector)
         scored = chunks.withColumn(
             "score", F.round(cosine(F.col("embedding"), qv), 6)
         )
@@ -112,11 +112,12 @@ class EngineQuery:
 
     def similarity_search(self, index_name: str, query: str, k: int = 5) -> DataFrame:
         """Q:143-164 — embed the query text, then vector top-k. The
-        query embeds through the same stage as documents (T7 ≡ T6)."""
+        query embeds through the same stage as documents (T7 ≡ T6).
+        The query row is a literal over ``range(1)``, not a
+        ``createDataFrame`` row: no temp file on the driver and no
+        Python worker to decode it when the broadcast runs."""
         self._require(index_name)
-        qrow = self.spark.createDataFrame([(query,)], "q string").select(
-            self._embed(F.col("q")).alias("qv")
-        )
+        qrow = self.spark.range(1).select(self._embed(F.lit(query)).alias("qv"))
         chunks = self.store.read_collection(index_name)
         scored = chunks.crossJoin(F.broadcast(qrow)).withColumn(
             "score", F.round(cosine(F.col("embedding"), F.col("qv")), 6)

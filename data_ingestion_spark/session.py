@@ -12,6 +12,16 @@ pod-to-pod artifact hops. Config choices are scale-oriented:
   TIMESTAMP(NANOS) which Spark's parquet reader rejects; we read the
   raw int64 and convert losslessly to timestamp_ntz (data is exactly
   microsecond-precision).
+- ``dataFrameDebugging`` off: PySpark 4 wraps every Column and
+  DataFrame call to capture its Python call site, which costs extra
+  py4j round trips per call (Spark's docs note the "non-trivial
+  performance overhead"). Plans built from many Column calls paid for
+  it on every request; building a ``similarity_search`` plan made
+  thousands of round trips. The conf is static, so only
+  ``get_spark`` can set it: ``ensure_engine_confs`` cannot apply it
+  to a session created outside the engine, which keeps capture on.
+  What is lost is the Python file and line in the query context of a
+  DataFrame error; the error class and message are unchanged.
 """
 
 from __future__ import annotations
@@ -59,6 +69,8 @@ def get_spark(app_name: str = "data-ingestion-spark", cpus: int | None = None) -
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # static: no per-call call-site capture (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
@@ -73,7 +85,8 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     The correctness driver calls our query functions with its own
     SparkSession; these two confs are required to read ``events`` and
     to keep timestamp conversion deterministic, and both are
-    runtime-settable SQL confs.
+    runtime-settable SQL confs. Call-site capture stays as the owner
+    configured it: its conf is static (module docstring).
     """
     for k, v in RUNTIME_CONFS.items():
         spark.conf.set(k, v)

@@ -648,3 +648,31 @@ def test_band_store_compact_and_report(spark, tmp_path):
     )
     assert folded.exceptAll(expect).count() == 0
     assert expect.exceptAll(folded).count() == 0
+
+
+def _shingles_reference(text, n):
+    """Pure-Python twin of ``word_shingles``: word n-grams over a
+    single-space split (empty words kept), at least one shingle, first
+    occurrence order; null text shingles like an empty word list."""
+    words = [] if text is None else text.split(" ")
+    grams = [
+        " ".join(words[i : i + n]) for i in range(max(len(words) - (n - 1), 1))
+    ]
+    return list(dict.fromkeys(grams))
+
+
+def test_word_shingles_match_python_ngrams(spark):
+    import random
+
+    from pyspark.sql import functions as F
+
+    from data_ingestion_spark.functions.dedup import word_shingles
+
+    rng = random.Random(3)
+    vocab = ["a", "b", "spark", "数据", ""]
+    texts = ["", "a", "a b", None, "a  b   c ", "   ", "a b a b a b"]
+    texts += [" ".join(rng.choice(vocab) for _ in range(rng.randint(0, 30))) for _ in range(40)]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    for n in (1, 2, 3, 5):
+        for r in df.select("i", word_shingles(F.col("t"), n).alias("s")).collect():
+            assert r.s == _shingles_reference(texts[r.i], n), (n, texts[r.i])

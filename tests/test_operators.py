@@ -136,6 +136,35 @@ def test_embed_deterministic_stability(spark):
     assert len(vec) == 8 and all(-1.0 <= x <= 1.0 for x in vec)
 
 
+def _embed_reference(text, dim, seed="emb"):
+    """hashlib twin of ``embed_deterministic``: component i is the
+    first 15 hex digits of md5(seed|i|text) scaled to [-1, 1], as
+    float32; null text gives null components."""
+    import hashlib
+
+    import numpy as np
+
+    if text is None:
+        return [None] * dim
+    out = []
+    for i in range(dim):
+        h = hashlib.md5(f"{seed}|{i}|{text}".encode()).hexdigest()
+        x = float(int(h[:15], 16)) / float(16**15 - 1) * 2.0 - 1.0
+        out.append(float(np.float32(x)))
+    return out
+
+
+def test_embed_deterministic_matches_hashlib_reference(spark):
+    texts = ["", "naïve café — 数据 ✓", "lorem ipsum " * 256, None]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    for dim in (1, 8, 64, 768):
+        got = df.select("i", embed_deterministic(F.col("t"), dim).alias("e")).collect()
+        for r in got:
+            assert r.e == _embed_reference(texts[r.i], dim), (dim, r.i)
+    with pytest.raises(ValueError, match="dim must be >= 1"):
+        embed_deterministic(F.col("t"), 0)
+
+
 def test_embed_pandas_udf_shape(spark):
     docs = load_table(spark, SF_SMALL, "documents").limit(10)
     out = docs.select("doc_id", make_embed_udf(16)(F.col("text")).alias("e")).collect()

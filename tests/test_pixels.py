@@ -283,6 +283,24 @@ def test_truncated_ihdr_body_is_data_not_crash():
     assert png_decode(bad) is None
 
 
+def test_zero_dimension_png_and_gif_return_none():
+    # a flipped size byte giving width or height 0 used to decode to an
+    # empty pixel buffer with a 0 dim, breaking the w >= 1, h >= 1 contract
+    png = png_encode(5, 4, bytes(range(20)))
+    for off in (16 + 3, 20 + 3):  # low byte of IHDR width / height
+        b = bytearray(png)
+        b[off - 3 : off + 1] = bytes(4)
+        assert png_decode(bytes(b)) is None
+        assert decode_pixel_payload(bytes(b)) is None
+    gif = gif_encode(5, 4, bytes(20))
+    desc = 6 + 7 + 768  # header + LSD + global palette
+    for off in (desc + 5, desc + 7):  # frame width / height
+        g = bytearray(gif)
+        g[off : off + 2] = bytes(2)
+        assert gif_decode(bytes(g)) is None
+        assert decode_pixel_payload(bytes(g)) is None
+
+
 def test_short_palette_keeps_pixel_length_contract():
     # PLTE of 4 bytes with index 1 used: the partial 1-byte slice must
     # NOT be slice-assigned (bytearray resizes on mismatch, silently

@@ -100,6 +100,15 @@ def test_contracts(spark, store):
         IvfPqStore(spark, tempfile.mkdtemp(prefix="nostore_"))
 
 
+def test_maybe_compact_rejects_max_segments_below_one(spark, store):
+    from data_ingestion_spark.functions.pq import maybe_compact_ivfpq_store
+
+    s, _ = store
+    for root in (s.root, tempfile.mkdtemp(prefix="nostore_")):
+        with pytest.raises(ValueError, match="max_segments must be >= 1"):
+            maybe_compact_ivfpq_store(spark, root, 0)
+
+
 @pytest.mark.slow
 def test_zero_vector_safe(spark):
     v = spark.createDataFrame(

@@ -77,6 +77,84 @@ def test_missing_collection_raises(engine):
         engine.similarity_search("no_such_collection", "q", k=1)
 
 
+def test_vector_literal_bit_identical(spark):
+    import random
+    import struct
+
+    import numpy as np
+
+    from data_ingestion_spark.functions.similarity import vector_literal
+
+    rng = random.Random(11)
+    vals = [0.1, 1 / 3, 5e-324, 2.2250738585072014e-308, 1.7976931348623157e308,
+            -0.0, 0.0, 1e22, 1e23, 2.0**53 + 2, float("nan"), float("inf"),
+            float("-inf")]
+    vals += [rng.uniform(-1, 1) for _ in range(300)]
+    # random bit patterns, minus NaNs with payloads: the JVM keeps one
+    # canonical NaN, as it does for ``F.lit(float("nan"))``
+    bits = (struct.unpack("<d", struct.pack("<Q", rng.getrandbits(64)))[0] for _ in range(300))
+    vals += [x for x in bits if x == x]
+    vals += list(np.random.default_rng(0).uniform(-1, 1, 100).astype(np.float32))
+    got = spark.range(1).select(vector_literal(vals).alias("v")).head().v
+    assert [struct.pack("<d", x) for x in got] == [struct.pack("<d", float(x)) for x in vals]
+
+
+def _round_trips_to_build(spark, build) -> int:
+    """py4j commands this thread sends while ``build()`` runs. Other
+    threads (py4j's finalizer deleting dead JVM references) are not
+    counted: they run whenever Python's GC does."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, n = client.send_command, threading.get_ident(), [0]
+
+    def counting(*a, **kw):
+        n[0] += threading.get_ident() == me
+        return send(*a, **kw)
+
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        del client.send_command
+    return n[0]
+
+
+def test_similarity_search_plan_round_trips_independent_of_dim(spark, tmp_path):
+    """Building (not running) a similarity_search plan costs a fixed
+    number of JVM round trips: the query embedding is one transform
+    expression and the session does no per-call call-site capture."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_spark.functions.embedding import embed_deterministic
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    dims = (8, 64, 768)
+    store = ParquetVectorStore(spark, str(tmp_path / "rt"))
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} text", f"d{d}") for d in dims for i in range(4)],
+        "chunk_id long, chunk_text string, index_name string",
+    )
+    store.upsert(docs.withColumn("embedding", F.lit(None).cast("array<float>")))
+    engines = {d: EngineQuery(spark, store, embed_dim=d) for d in dims}
+    for d in dims:  # warm: first use resolves JVM classes
+        engines[d].similarity_search(f"d{d}", "warm", k=3)
+    counts = {
+        d: _round_trips_to_build(
+            spark, lambda d=d: engines[d].similarity_search(f"d{d}", "spark filter join", k=3)
+        )
+        for d in dims
+    }
+    assert len(set(counts.values())) == 1 and counts[8] <= 500, counts
+    vec = {
+        d: _round_trips_to_build(
+            spark, lambda d=d: engines[d].search_by_vector(f"d{d}", [0.5] * d, k=3)
+        )
+        for d in dims
+    }
+    assert len(set(vec.values())) == 1, vec
+
+
 def test_bm25_rank_semantics_and_plan(spark):
     """BM25: a doc saturated with query terms outranks a partial
     match, which outranks a non-match (absent entirely); rare terms
