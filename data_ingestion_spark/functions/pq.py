@@ -105,6 +105,7 @@ from .similarity import (
     _next_index_version,
     _parquet_rows,
     _read_manifest,
+    _run_overlapped,
     _write_manifest,
     brute_force_topk,
     index_current_path,
@@ -695,11 +696,7 @@ def _write_segment(
             os.path.join(root, "ids", f"seg={seg}")
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [pool.submit(w) for w in (_w_codes, _w_raw, _w_ids)]:
-            fut.result()
+    _run_overlapped(src.sparkSession, _w_codes, _w_raw, _w_ids)
 
 
 def _next_pq_segment(root: str) -> int:

@@ -648,7 +648,7 @@ def test_bm25_index_upsert_equals_rebuild(spark, tmp_path):
     rebuilt = str(tmp_path / "rebuilt")
     build_postings_index(final, rebuilt, buckets=8)
 
-    ps, ts = _index_read_schemas(spark, dst)
+    ps, ts = _index_read_schemas(dst)
     def rows(path, schema, cols):
         return sorted(
             tuple(r) for r in spark.read.schema(schema).parquet(path).select(*cols).collect()
