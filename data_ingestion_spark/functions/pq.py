@@ -18,10 +18,12 @@ for Nearest Neighbor Search" — the FAISS ``IVFxx,PQyy`` layout):
 - **ADC** (asymmetric distance computation): at probe time the query
   is never encoded — per probed cell a tiny ``m × k_pq`` table of
   exact squared distances from the query's residual to every codeword
-  is computed DRIVER-side (numpy over a few thousand floats) and
-  broadcast; each stored code then scores with ``m`` array lookups —
-  a pure JVM higher-order expression inside whole-stage codegen, no
-  Python anywhere in the scan.
+  is computed DRIVER-side (numpy over a few thousand floats). A
+  single-query probe passes the probed cells' tables into the plan as
+  ONE constant-folded array literal (a batch joins them in as a
+  JVM-only side frame); each stored code then scores with ``m`` array
+  lookups — a pure JVM higher-order expression inside whole-stage
+  codegen, no Python anywhere in the scan.
 - **Exact re-score**: the ADC top-``keep`` candidates fetch their raw
   floats from an id-hash-partitioned sidecar (the ``write_quantized``
   raw/ discipline) and re-rank by EXACT cosine — PQ decides what to
@@ -88,7 +90,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -105,10 +107,14 @@ from .similarity import (
     _next_index_version,
     _parquet_rows,
     _read_manifest,
+    _read_partitions,
     _run_overlapped,
     _write_manifest,
     brute_force_topk,
+    cosine,
+    dot_product,
     index_current_path,
+    local_frame,
     resolve_version_dir,
     vector_literal,
 )
@@ -213,6 +219,9 @@ _CODES_SCHEMA = StructType(
         StructField("codes", ArrayType(ShortType())),
     ]
 )
+_PAIR_SCHEMA = StructType(
+    [StructField("id", LongType()), StructField("seg", IntegerType())]
+)
 
 
 class IvfPqStore:
@@ -287,6 +296,12 @@ class IvfPqStore:
         return self._centroids, self._codebooks
 
     # -- serving -------------------------------------------------------
+    def _read(self, pool: str, hits: dict[str, list[int]]) -> DataFrame:
+        """One pool (codes/, raw/ or ids/) read with its footer schema,
+        listing only the ``hits`` partition directories (``seg`` first)
+        — the pruned ``similarity._read_partitions`` read."""
+        return _read_partitions(self.spark, os.path.join(self.root, pool), hits)
+
     def _shadow_filter(self, scored: DataFrame) -> DataFrame:
         """Last-wins shadowing over segmented candidates: a candidate
         (id, seg) is dead iff ANY newer segment's ids/ sidecar lists
@@ -302,13 +317,11 @@ class IvfPqStore:
         segs = self.meta["segments"]
         if len(segs) <= 1:
             return scored
-        shadow = (
-            self.spark.read.parquet(os.path.join(self.root, "ids"))
-            # committed-only: a crashed upsert's orphan seg dir (data
-            # written, meta never swapped) must not shadow anything
-            .filter(F.col("seg").isin(segs))
-            .filter(F.col("seg") > min(segs))
-            .select(F.col("id").alias("__sid"), F.col("seg").alias("__sseg"))
+        # committed-only: a crashed upsert's orphan seg dir (data
+        # written, meta never swapped) must not shadow anything
+        newer = [s for s in segs if s > min(segs)]
+        shadow = self._read("ids", {"seg": newer}).select(
+            F.col("id").alias("__sid"), F.col("seg").alias("__sseg")
         )
         return scored.join(
             F.broadcast(shadow),
@@ -316,61 +329,79 @@ class IvfPqStore:
             "left_anti",
         )
 
-    def _scored_codes(self, lut_df: DataFrame, probed: list[int], *extra_cols: str) -> DataFrame:
-        """Shadow-filtered ADC scores over the pruned code scan:
-        (..extra_cols.., id, seg, adc). The scan prunes on ivf_cell
-        (a partition column — PartitionFilters, pytest-asserted);
-        scoring is m JVM array lookups inside codegen."""
-        codes = self.spark.read.parquet(os.path.join(self.root, "codes"))
-        scored = (
-            # seg IN committed: crash-debris segment dirs are invisible
-            # (both are partition filters — the scan prunes on each)
-            codes.filter(F.col("seg").isin(self.meta["segments"]))
-            .filter(F.col("ivf_cell").isin(probed))
-            .join(F.broadcast(lut_df), "ivf_cell")
-            .select(
-                *extra_cols,
-                *self.meta.get("metadata_cols", []),
-                "id",
-                "seg",
-                F.aggregate(
-                    F.zip_with(
-                        "codes",
-                        "lut",
-                        lambda c, l: F.element_at(l, c.cast("int") + 1),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ).alias("adc"),
-            )
+    def _scored_codes(
+        self, codes: DataFrame, lut: Column, cell_pos: Column, *extra_cols: str
+    ) -> DataFrame:
+        """Shadow-filtered ADC scores over a pruned code scan:
+        (..extra_cols.., id, seg, adc). ``lut`` is an array<double> of
+        ADC tables laid out cell-major, then subspace, then code, and
+        ``cell_pos`` picks the row's table in it: the score of code
+        ``c`` in subspace ``s`` is ``lut[(cell_pos·m + s)·k_pq + c]``.
+        The m lookups are summed in subspace order from 0.0, all JVM
+        higher-order functions inside codegen."""
+        k_pq = self.meta["k_pq"]
+        base = cell_pos * (self.meta["m"] * k_pq) + 1
+        scored = codes.select(
+            *extra_cols,
+            *self.meta.get("metadata_cols", []),
+            "id",
+            "seg",
+            F.aggregate(
+                F.transform(
+                    "codes",
+                    lambda c, s: F.element_at(lut, base + s * k_pq + c.cast("int")),
+                ),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            ).alias("adc"),
         )
         return self._shadow_filter(scored)
 
-    def _query_luts(self, qn: np.ndarray, n_probe: int):
-        """(probed cells, per-cell m×k_pq ADC tables) for one
-        normalized query — numpy over a few KB, driver-side."""
+    def _codes(self, probed: list[int]) -> DataFrame:
+        """The committed segments' codes in the ``probed`` cells: only
+        their ``seg=S/ivf_cell=C`` directories are listed, and both
+        ``isin``s are the scan's partition filters (crash-debris
+        segment dirs are invisible)."""
+        return self._read("codes", {"seg": self.meta["segments"], "ivf_cell": probed})
+
+    def _query_luts(self, qn: np.ndarray, n_probe: int) -> tuple[list[int], np.ndarray]:
+        """(probed cells, their m×k_pq ADC tables as one
+        n_probe×m×k_pq array) for one normalized query — numpy over a
+        few KB, driver-side."""
         C, CB = self._load_quantizers()
         m = self.meta["m"]
         ds = self.meta["dim"] // m
         order = (((C - qn) ** 2).sum(axis=1)).argsort(kind="stable")
         probed = [int(c) for c in order[:n_probe]]
-        luts = []
-        for c in probed:
-            qr = (qn - C[c]).reshape(m, ds)
-            # lut[s][j] = || qr_s - codebook[s][j] ||²  (m × k_pq floats)
-            lut = ((qr[:, None, :] - CB) ** 2).sum(axis=2)
-            luts.append((c, [[float(v) for v in row] for row in lut]))
-        return luts
+        # lut[s][j] = || qr_s - codebook[s][j] ||² per probed cell
+        luts = [
+            ((((qn - C[c]).reshape(m, ds))[:, None, :] - CB) ** 2).sum(axis=2)
+            for c in probed
+        ]
+        return probed, np.stack(luts)
+
+    def _normalized(self, qv, label: str = "query") -> np.ndarray:
+        """``qv`` as a unit float64 vector (a zero vector unscaled),
+        refused when its width is not the store's."""
+        dim = self.meta["dim"]
+        if len(qv) != dim:
+            raise ValueError(f"{label} has {len(qv)} dims, store has {dim}")
+        q = np.asarray(qv, dtype=np.float64)
+        nrm = np.sqrt((q * q).sum())
+        return q / nrm if nrm > 0 else q
 
     def adc_candidates(
         self, qv: list[float], n_probe: int = 4, keep: int = 128,
         where=None,
     ) -> DataFrame:
-        """(id, adc) — the ``keep`` best LIVE stored codes by
+        """(id, seg, adc) — the ``keep`` best LIVE stored codes by
         asymmetric distance among the ``n_probe`` cells nearest the
         query (shadowed/deleted copies already excluded). Exposed
         separately so plans (pruning) and recall are testable without
-        the raw-fetch stage."""
+        the raw-fetch stage. The probed cells' ADC tables enter the
+        plan as ONE constant-folded array literal (no side frame, no
+        join); each code finds its cell's table by the cell's
+        position in the probed list."""
         if keep > MAX_KEEP:
             raise ValueError(
                 f"keep={keep} exceeds MAX_KEEP={MAX_KEEP} — the probe "
@@ -378,18 +409,14 @@ class IvfPqStore:
                 "sidecar's partition filter; lower keep (or raise MAX_KEEP "
                 "deliberately)"
             )
-        dim = self.meta["dim"]
-        if len(qv) != dim:
-            raise ValueError(f"query has {len(qv)} dims, store has {dim}")
-        n_probe = min(n_probe, self.meta["n_cells"])
-        q = np.asarray(qv, dtype=np.float64)
-        nrm = np.sqrt((q * q).sum())
-        qn = q / nrm if nrm > 0 else q
-        luts = self._query_luts(qn, n_probe)
-        lut_df = self.spark.createDataFrame(
-            luts, "ivf_cell int, lut array<array<double>>"
+        qn = self._normalized(qv)
+        probed, luts = self._query_luts(qn, min(n_probe, self.meta["n_cells"]))
+        cells = F.split(F.lit(",".join(map(str, probed))), ",").cast("array<int>")
+        scored = self._scored_codes(
+            self._codes(probed),
+            vector_literal(luts.ravel()),
+            (F.array_position(cells, F.col("ivf_cell")) - 1).cast("int"),
         )
-        scored = self._scored_codes(lut_df, [c for c, _ in luts])
         if where is not None:
             # metadata filter INSIDE the pruned scan, before the
             # top-keep — post-filter semantics on recall (same caveat
@@ -408,40 +435,35 @@ class IvfPqStore:
         """ADC candidates → exact cosine re-rank from the raw sidecar.
         Returns (id_col, score) — the ``AnnStore.probe`` contract
         (6dp-rounded score, id tiebreak). The candidate (id, seg) set
-        (≤ keep rows) is collected driver-side to build the raw
-        sidecar's partition filter — same bounded-collect discipline
-        as ``AnnStore._raw_fetch``; the raw join keys on (id, seg) so
+        (≤ keep rows) is collected driver-side: it names the raw
+        ``seg=S/__rb=B`` directories to list and re-enters the plan as
+        a JVM-only ``local_frame``. The raw join keys on (id, seg), so
         a replaced id's STALE raw row (older segment) can never serve
-        the re-rank."""
+        the re-rank. Three Spark jobs on a single-segment store: the
+        candidate collect, the candidate broadcast and the re-rank."""
         if keep < k:
             raise ValueError(f"keep={keep} must be >= k={k}")
         cand = self.adc_candidates(qv, n_probe, keep, where=where)
         pairs = [(r.id, r.seg) for r in cand.select("id", "seg").collect()]
+        id_col = self.meta["id_col"]
         if not pairs:
-            return self.spark.createDataFrame(
-                [], f"{self.meta['id_col']} bigint, score double"
-            )
+            return local_frame(self.spark, [], StructType(
+                [StructField(id_col, LongType()), StructField("score", DoubleType())]
+            ))
         rb = self.meta["raw_id_buckets"]
-        buckets = sorted({_id_bucket(i, rb) for i, _ in pairs})
-        from .similarity import dot_product
-
-        cand_df = self.spark.createDataFrame(
-            pairs, "id bigint, seg int"
-        )
+        hits = {
+            "seg": sorted({s for _, s in pairs}),
+            "__rb": sorted({_id_bucket(i, rb) for i, _ in pairs}),
+        }
         raw = (
-            self.spark.read.parquet(os.path.join(self.root, "raw"))
-            .filter(F.col("__rb").isin(buckets))
-            .join(F.broadcast(cand_df), ["id", "seg"])
+            self._read("raw", hits)
+            .join(F.broadcast(local_frame(self.spark, pairs, _PAIR_SCHEMA)), ["id", "seg"])
             # zero-norm vectors have no cosine to any query — drop them
             # here rather than trip ANSI divide-by-zero in the re-rank
             .filter(dot_product(F.col("vec"), F.col("vec")) > 0)
         )
-        qcol = vector_literal(qv)
-        out = brute_force_topk(raw, qcol, k, "id", "vec")
-        return out.select(
-            F.col("id").alias(self.meta["id_col"]), "score"
-        )
-
+        out = brute_force_topk(raw, vector_literal(qv), k, "id", "vec")
+        return out.select(F.col("id").alias(id_col), "score")
 
     def probe_batch(
         self,
@@ -459,64 +481,78 @@ class IvfPqStore:
         score, id tiebreak; per query equals ``probe`` exactly —
         pytest-pinned).
 
-        Plan shape: the query batch is collected driver-side (a
-        serving batch, bounded by ``MAX_BATCH_QUERIES`` — the per-
-        query ADC tables are what get broadcast: N·n_probe·m·k_pq
-        doubles, 33 MB at the 512-query cap with default geometry,
-        which is the reason for the cap), per-(query, cell) LUTs
-        computed in numpy, ONE partition-pruned code scan over the
-        UNION of probed cells (≤ n_cells literals regardless of batch
-        size), a broadcast fan-out join on ivf_cell, ADC scoring as m
-        JVM lookups, one window for per-query top-``keep``, then the
-        exact re-rank: the candidate frame's raw-sidecar buckets are
-        derived ENGINE-side (distinct ≤ raw_id_buckets rows — the
-        collect is bounded by a store constant, never by batch size),
-        the pruned raw scan broadcast-joins the candidates, and one
-        window ranks exact cosine per query. The candidate subtree
-        executes twice (bucket collect + join) — the measured
-        lazy-recompute trade from the batch-quantized ledger
-        (BENCH_NOTES r13/r14): it is a pruned scan + broadcast join,
-        cheaper re-run than materialized."""
+        Plan shape: the query batch is collected driver-side in one
+        bounded job (at most ``MAX_BATCH_QUERIES`` + 1 rows, so a
+        refused batch is never pulled whole — the per-query ADC tables
+        are what get broadcast: N·n_probe·m·k_pq doubles, 33 MB at the
+        512-query cap with default geometry, which is the reason for
+        the cap), per-(query, cell) LUTs computed in numpy and
+        entering as a JVM-only ``local_frame``, ONE partition-pruned
+        code scan over the UNION of probed cells (≤ n_cells literals
+        regardless of batch size), a broadcast fan-out join on
+        ivf_cell, the ``_scored_codes`` ADC expression, one window for
+        per-query top-``keep``, then the exact re-rank: the candidate
+        frame's raw-sidecar buckets are derived ENGINE-side (distinct
+        ≤ raw_id_buckets rows — the collect is bounded by a store
+        constant, never by batch size), the pruned raw scan
+        broadcast-joins the candidates, and one window ranks exact
+        cosine per query. The candidate subtree executes twice (bucket
+        collect + join) — the measured lazy-recompute trade from the
+        batch-quantized ledger (BENCH_NOTES r13/r14): it is a pruned
+        scan + broadcast join, cheaper re-run than materialized."""
         if keep < k:
             raise ValueError(f"keep={keep} must be >= k={k}")
         if keep > MAX_KEEP:
             raise ValueError(
                 f"keep={keep} exceeds MAX_KEEP={MAX_KEEP} — see probe()"
             )
-        qid_type = queries_df.schema[query_id_col].dataType.simpleString()
-        qrows = queries_df.select(query_id_col, query_vec_col).collect()
+        qid_type = queries_df.schema[query_id_col].dataType
+        qrows = (
+            queries_df.select(query_id_col, query_vec_col)
+            .coalesce(1)
+            .limit(MAX_BATCH_QUERIES + 1)
+            .collect()
+        )
         if len(qrows) > MAX_BATCH_QUERIES:
             raise ValueError(
-                f"probe_batch got {len(qrows)} queries; the per-query ADC "
-                f"tables broadcast to every task, so batches are capped at "
-                f"MAX_BATCH_QUERIES={MAX_BATCH_QUERIES} — split the batch "
-                "(or raise the cap deliberately)"
+                f"probe_batch got more than {MAX_BATCH_QUERIES} queries; the "
+                "per-query ADC tables broadcast to every task, so batches are "
+                f"capped at MAX_BATCH_QUERIES={MAX_BATCH_QUERIES} — split the "
+                "batch (or raise the cap deliberately)"
             )
+        out_schema = StructType(
+            [
+                StructField(query_id_col, qid_type),
+                StructField(self.meta["id_col"], LongType()),
+                StructField("score", DoubleType()),
+                StructField("rank", IntegerType()),
+            ]
+        )
         if not qrows:
-            return self.spark.createDataFrame(
-                [], f"{query_id_col} {qid_type}, {self.meta['id_col']} bigint, "
-                "score double, rank int"
-            )
-        dim = self.meta["dim"]
+            return local_frame(self.spark, [], out_schema)
         n_probe = min(n_probe, self.meta["n_cells"])
         lut_rows, probed_union = [], set()
         for r in qrows:
-            qv = [float(x) for x in r[query_vec_col]]
-            if len(qv) != dim:
-                raise ValueError(
-                    f"query {r[query_id_col]!r} has {len(qv)} dims, "
-                    f"store has {dim}"
-                )
-            q = np.asarray(qv, dtype=np.float64)
-            nrm = np.sqrt((q * q).sum())
-            qn = q / nrm if nrm > 0 else q
-            for c, lut in self._query_luts(qn, n_probe):
-                probed_union.add(c)
-                lut_rows.append((r[query_id_col], c, lut))
-        lut_df = self.spark.createDataFrame(
-            lut_rows, f"{query_id_col} {qid_type}, ivf_cell int, lut array<array<double>>"
+            qn = self._normalized(r[query_vec_col], f"query {r[query_id_col]!r}")
+            probed, luts = self._query_luts(qn, n_probe)
+            probed_union.update(probed)
+            lut_rows += [
+                (r[query_id_col], c, lut.ravel().tolist())
+                for c, lut in zip(probed, luts)
+            ]
+        lut_df = local_frame(self.spark, lut_rows, StructType(
+            [
+                StructField(query_id_col, qid_type),
+                StructField("ivf_cell", IntegerType()),
+                StructField("lut", ArrayType(DoubleType())),
+            ]
+        ))
+        scored = self._scored_codes(
+            self._codes(sorted(probed_union)).join(F.broadcast(lut_df), "ivf_cell"),
+            F.col("lut"),
+            F.lit(0),
+            query_id_col,
         )
-        scored = self._scored_codes(lut_df, sorted(probed_union), query_id_col)
         if where is not None:
             # same post-filter semantics as probe(where=), per query
             scored = scored.filter(where)
@@ -541,20 +577,19 @@ class IvfPqStore:
             .collect()
         ]
         if not buckets:
-            return self.spark.createDataFrame(
-                [], f"{query_id_col} {qid_type}, {self.meta['id_col']} bigint, "
-                "score double, rank int"
-            )
-        from .similarity import cosine, dot_product
-
-        raw = (
-            self.spark.read.parquet(os.path.join(self.root, "raw"))
-            .filter(F.col("__rb").isin(sorted(buckets)))
-            .filter(dot_product(F.col("vec"), F.col("vec")) > 0)
-        )
-        qvec_df = self.spark.createDataFrame(
+            return local_frame(self.spark, [], out_schema)
+        raw = self._read(
+            "raw", {"seg": self.meta["segments"], "__rb": sorted(buckets)}
+        ).filter(dot_product(F.col("vec"), F.col("vec")) > 0)
+        qvec_df = local_frame(
+            self.spark,
             [(r[query_id_col], [float(x) for x in r[query_vec_col]]) for r in qrows],
-            f"{query_id_col} {qid_type}, __qvec array<double>",
+            StructType(
+                [
+                    StructField(query_id_col, qid_type),
+                    StructField("__qvec", ArrayType(DoubleType())),
+                ]
+            ),
         )
         exact = (
             # (id, seg) keying: a replaced id's stale raw row (older

@@ -51,9 +51,11 @@ def local_frame(spark, rows, schema) -> DataFrame:
     round-trip ``repr`` (nan and ±inf as the ``NaN``/``Infinity``
     tokens Spark's JSON reader accepts), a long as its full integer
     digits (exact past 2**53), a string ASCII-escaped (surrogate
-    pairs for non-BMP characters) and None as null. ``[]`` gives zero
-    rows with the schema. A schema with a field JSON cannot carry
-    exactly (dates, decimals, binary, nested types) falls back to
+    pairs for non-BMP characters), a list as a JSON array and None
+    as null. Array fields, nested ones included, carry exactly when
+    their innermost element type does. ``[]`` gives zero rows with
+    the schema. A schema with a field JSON cannot carry exactly
+    (dates, decimals, binary, maps, structs) falls back to
     ``createDataFrame``."""
     import json
 
@@ -69,9 +71,13 @@ def local_frame(spark, rows, schema) -> DataFrame:
         StringType,
     )
 
-    exact = (BooleanType, ByteType, DoubleType, FloatType, IntegerType,
-             LongType, ShortType, StringType)
-    if not all(isinstance(f.dataType, exact) for f in schema.fields):
+    def exact(t) -> bool:
+        if isinstance(t, ArrayType):
+            return exact(t.elementType)
+        return isinstance(t, (BooleanType, ByteType, DoubleType, FloatType,
+                              IntegerType, LongType, ShortType, StringType))
+
+    if not all(exact(f.dataType) for f in schema.fields):
         return spark.createDataFrame(rows, schema)
     names = schema.fieldNames()
     js = json.dumps([dict(zip(names, r)) for r in rows])
@@ -801,7 +807,9 @@ class AnnStore:
                 "layout) — probe it via probe_quantized, not "
                 "probe/probe_candidates"
             )
-        return self.spark.read.parquet(self.path).filter(cond)
+        return _read_partitions(
+            self.spark, self.path, partitions=("table", "bucket")
+        ).filter(cond)
 
     def probe_candidates(self, qv: list[float], extra_flips: int = 0) -> DataFrame:
         """The pruned scan only — (1 + extra_flips) partitions per
@@ -1197,7 +1205,10 @@ class AnnStore:
         """Pruned (id, code) candidates from the codes/ subtree —
         the quantized half of ``_cond_scan``, factored out so the
         segmented layout can shadow per segment."""
-        codes = self.spark.read.parquet(self.path.rstrip("/") + "/codes")
+        codes = _read_partitions(
+            self.spark, self.path.rstrip("/") + "/codes",
+            partitions=("table", "bucket"),
+        )
         return codes.filter(self._pairs_cond(pairs)).select(
             self.id_col, "code"
         ).distinct()
@@ -1403,8 +1414,10 @@ class AnnStore:
         n_cand = sum(r["count"] for r in per_bucket)
         ids = F.broadcast(cand_ids) if n_cand <= BROADCAST_MAX_IDS else cand_ids
         return (
-            self.spark.read.parquet(self.path.rstrip("/") + "/raw")
-            .filter(F.col("id_bucket").isin(hit_buckets))
+            _read_partitions(
+                self.spark, self.path.rstrip("/") + "/raw",
+                {"id_bucket": hit_buckets},
+            )
             .join(ids, self.id_col)
             .select(self.id_col, self.vec_col)
         )
@@ -2171,30 +2184,51 @@ def _parquet_rows(path: str) -> int:
     return int(_local_dataset(path).count_rows())
 
 
-def _read_buckets(
-    spark, schema, table_dir: str, hit_buckets: list[int] | None
+def _read_partitions(
+    spark,
+    table_dir: str,
+    hits: dict[str, list[int]] | None = None,
+    schema=None,
+    partitions: tuple[str, ...] = (),
 ) -> DataFrame:
-    """A bucket-partitioned index table (postings/ or terms/),
-    partition-pruned to ``hit_buckets`` when given. The pruned read
-    lists only the hit ``bucket=N`` directories (``basePath`` keeps
-    ``bucket`` a partition column): listing the whole table launches
-    a Spark listing job once it holds more bucket directories than
-    ``spark.sql.sources.parallelPartitionDiscovery.threshold``. The
-    bucket ``isin`` stays in the plan as its partition filter."""
-    import os
+    """A Hive-partitioned parquet table, read with ``schema`` or, by
+    default, with its footer schema (``_footer_schema``: no inference
+    job). ``hits`` maps integer partition columns, outermost directory
+    level first, to the values a read needs; ``partitions`` names the
+    partition columns of an unpruned read.
 
-    reader = spark.read.schema(schema)
-    if hit_buckets is None:
-        return reader.parquet(table_dir)
-    dirs = [
-        f"{table_dir}/bucket={b}"
-        for b in hit_buckets
-        if os.path.isdir(f"{table_dir}/bucket={b}")
-    ]
-    # no hit directory found (an empty batch, terms hashing only into
-    # empty buckets, or a file: URI root): read the whole table
-    df = reader.option("basePath", table_dir).parquet(*dirs) if dirs else reader.parquet(table_dir)
-    return df.filter(F.col("bucket").isin(hit_buckets))
+    A pruned read lists only the hit ``col=v/...`` directories that
+    exist (``basePath`` keeps them partition columns), at most
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` per
+    scan so the listing stays on the driver: past the threshold Spark
+    lists in a job, so a longer list is read as a union of scans.
+    Each column's ``isin`` stays in the plan as its partition filter.
+    With no hit directory found (an empty batch, hits only in empty
+    partitions, or a ``file:`` URI root) it reads the whole table."""
+    import os
+    from functools import reduce
+
+    dirs = [table_dir]
+    for col, vals in (hits or {}).items():
+        dirs = [f"{d}/{col}={v}" for d in dirs for v in vals]
+    # only local directories are listed or footer-read: a file: or
+    # remote URI reads the whole table, inferring its schema
+    dirs = [d for d in dirs if os.path.isdir(d)]
+    if schema is None and dirs:
+        schema = _footer_schema(dirs[0], tuple(hits or partitions))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if hits is None or not dirs:
+        df = reader.parquet(table_dir)
+    else:
+        reader = reader.option("basePath", table_dir)
+        n = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+        df = reduce(
+            DataFrame.unionAll,
+            [reader.parquet(*dirs[i:i + n]) for i in range(0, len(dirs), n)],
+        )
+    for col, vals in (hits or {}).items():
+        df = df.filter(F.col(col).isin(vals))
+    return df
 
 
 class IndexReader:
@@ -2323,7 +2357,11 @@ class IndexReader:
         )
 
         def rd(p: str) -> DataFrame:
-            df = _read_buckets(self.spark, post_schema, p + "/postings", hit_buckets)
+            df = _read_partitions(
+                self.spark, p + "/postings",
+                None if hit_buckets is None else {"bucket": hit_buckets},
+                schema=post_schema,
+            )
             if terms is not None:
                 df = df.filter(F.col("term").isin(terms))
             return df
@@ -2333,8 +2371,7 @@ class IndexReader:
     def _segment_doclens(self, seg: str) -> DataFrame:
         """One segment's doclens/ (doc_id, dl), read with its footer
         schema — no schema-inference job per read."""
-        d = seg + "/doclens"
-        return self.spark.read.schema(_footer_schema(d)).parquet(d)
+        return _read_partitions(self.spark, seg + "/doclens")
 
     def doclens(self) -> DataFrame:
         """The logical (doc_id, dl) table — 1 row/doc, 2 columns: the
@@ -2367,7 +2404,10 @@ class IndexReader:
             data = self._first_data_path()
             _, term_schema = _index_read_schemas(data, self.positional)
             return (
-                _read_buckets(self.spark, term_schema, data + "/terms", hit_buckets)
+                _read_partitions(
+                    self.spark, data + "/terms", {"bucket": hit_buckets},
+                    schema=term_schema,
+                )
                 .filter(F.col("term").isin(terms))
                 .select(F.col("term").alias("__t"), F.col("df").alias("__df"))
             )
@@ -2846,7 +2886,7 @@ class SegmentedAnnStore(AnnStore):
 
         ids_dir = os.path.join(seg, "ids")
         if os.path.isdir(ids_dir):
-            return self.spark.read.parquet(ids_dir)
+            return _read_partitions(self.spark, ids_dir)
         # legacy monolithic base has no sidecar; it is only ever needed
         # if it appears as a NON-oldest segment, which the write paths
         # never produce — derive from the layout's id source if so:
@@ -2867,8 +2907,10 @@ class SegmentedAnnStore(AnnStore):
     def _resolved_candidates(self, cond) -> DataFrame:
         cols = [self.id_col, self.vec_col, *self._metadata_cols, "table", "bucket"]
         return self._shadowed(
-            lambda i: self.spark.read.parquet(
-                _ann_seg_data_dir(self.seg_paths[i])
+            lambda i: _read_partitions(
+                self.spark,
+                _ann_seg_data_dir(self.seg_paths[i]),
+                partitions=("table", "bucket"),
             )
             .filter(cond)
             .select(*cols)
@@ -4015,19 +4057,26 @@ def bool_search_indexed(
     )
 
 
-def _footer_schema(table_dir: str):
+def _footer_schema(table_dir: str, partitions: tuple[str, ...] = ()):
     """The Spark schema of a parquet table directory, read driver-side
     from a footer (like ``_stats_local``): the schema Spark stores in
     its footers, which its own inference prefers, so reading with it
-    equals reading with inference minus the inference job."""
+    equals reading with inference minus the inference job. Footers
+    hold the data columns only; the named ``partitions`` follow as
+    the integer columns inference gives ``col=N`` directories. None
+    when the directory holds no Spark-written footer."""
     import json
 
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import IntegerType, StructType
 
-    footer = _local_dataset(table_dir).schema.metadata
-    return StructType.fromJson(
-        json.loads(footer[b"org.apache.spark.sql.parquet.row.metadata"])
-    )
+    footer = _local_dataset(table_dir).schema.metadata or {}
+    row = footer.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if row is None:
+        return None
+    schema = StructType.fromJson(json.loads(row))
+    for p in partitions:
+        schema = schema.add(p, IntegerType())
+    return schema
 
 
 def _index_read_schemas(root: str, positional: bool = False):

@@ -19,3 +19,17 @@ def spark():
     s = get_spark("engine-tests", cpus=8)
     yield s
     s.stop()
+
+
+def jobs_in_group(spark, fn, group: str) -> tuple[int, set]:
+    """(jobs run inside ``group``, jobs run outside any group) by ``fn``."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    outside_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    outside = set(tracker.getJobIdsForGroup(None)) - outside_before
+    return len(tracker.getJobIdsForGroup(group)), outside

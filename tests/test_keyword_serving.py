@@ -11,7 +11,7 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, jobs_in_group
 
 from data_ingestion_spark.functions import similarity as SIM
 
@@ -57,6 +57,7 @@ def indexes(spark, tmp_path_factory):
 
 def test_local_frame_round_trips_bit_identically(spark):
     from pyspark.sql.types import (
+        ArrayType,
         DoubleType,
         LongType,
         StringType,
@@ -69,21 +70,37 @@ def test_local_frame_round_trips_bit_identically(spark):
             StructField("d", DoubleType()),
             StructField("l", LongType()),
             StructField("s", StringType()),
+            StructField("ad", ArrayType(DoubleType())),
+            StructField("aad", ArrayType(ArrayType(DoubleType()))),
+            StructField("al", ArrayType(LongType())),
         ]
     )
     doubles = [math.nan, math.inf, -math.inf, -0.0, 0.0, 5e-324, 0.1, 1.7976931348623157e308]
     longs = [2**53 + 1, 2**63 - 1, -(2**63), -1, 0, 9007199254740993, 12345678901234567, None]
     strings = ['a"b', "back\\slash", "é", "\U0001f600 \U0001d11e", "'quote'\n\t", "", None, "\\u0041"]
-    rows = list(zip(doubles, longs, strings)) + [(None, None, None)]
+    arrays = [doubles, doubles[::-1], [None, 5e-324, None], [], None, [-0.0], [math.nan, None], [0.1]]
+    nested = [[doubles, [], None, [None, -math.inf]], [], None, [[5e-324]], [[]], [None], [doubles[:3]], [[-0.0, math.inf]]]
+    long_arrays = [longs, [], None, [None], [2**53 + 1, -(2**53) - 1], [-(2**63)], [2**63 - 1, None], [0]]
+    rows = list(zip(doubles, longs, strings, arrays, nested, long_arrays))
+    rows.append((None,) * 6)
     df = SIM.local_frame(spark, rows, schema)
-    assert df.schema.fieldNames() == ["d", "l", "s"]
-    assert [f.dataType for f in df.schema.fields] == [DoubleType(), LongType(), StringType()]
+    assert df.schema.fieldNames() == ["d", "l", "s", "ad", "aad", "al"]
+    assert [f.dataType for f in df.schema.fields] == [f.dataType for f in schema.fields]
     assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
     got = df.collect()
-    bits = lambda v: None if v is None else struct.pack(">d", v)
+
+    def bits(v):
+        # doubles compare by their IEEE bits (nan == nan, -0.0 != 0.0)
+        if isinstance(v, list):
+            return [bits(x) for x in v]
+        return None if v is None else struct.pack(">d", v)
+
     assert [bits(r.d) for r in got] == [bits(r[0]) for r in rows]
     assert [r.l for r in got] == [r[1] for r in rows]
     assert [r.s for r in got] == [r[2] for r in rows]
+    assert [bits(r.ad) for r in got] == [bits(r[3]) for r in rows]
+    assert [bits(r.aad) for r in got] == [bits(r[4]) for r in rows]
+    assert [r.al for r in got] == [r[5] for r in rows]
 
     empty = SIM.local_frame(spark, [], schema)
     assert empty.schema == df.schema and empty.collect() == []
@@ -120,20 +137,6 @@ def test_bm25_indexed_matches_inline_for_string_ids_and_empty_batches(
     assert out.collect() == []
 
 
-def _jobs_in_group(spark, fn, group: str) -> tuple[int, set]:
-    """(jobs run inside ``group``, jobs run outside any group) by ``fn``."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    outside_before = set(tracker.getJobIdsForGroup(None))
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    outside = set(tracker.getJobIdsForGroup(None)) - outside_before
-    return len(tracker.getJobIdsForGroup(group)), outside
-
-
 @pytest.mark.parametrize("layout,budget", [("mono", 6), ("seg3", 11)])
 def test_one_query_job_budget_and_no_python_rdd_in_plan(spark, indexes, layout, budget):
     """A one-query call reads the caller's frame once (one bounded
@@ -150,7 +153,7 @@ def test_one_query_job_budget_and_no_python_rdd_in_plan(spark, indexes, layout, 
             assert out.collect()
             plans.append(out._jdf.queryExecution().executedPlan().toString())
 
-        n, outside = _jobs_in_group(spark, call, f"kw-{layout}-{i}")
+        n, outside = jobs_in_group(spark, call, f"kw-{layout}-{i}")
         assert outside == set()
         assert 0 < n <= budget, (layout, text, n)
         assert "ExistingRDD" not in plans[0]
@@ -217,5 +220,5 @@ def test_overlapped_store_writes_run_in_the_callers_job_group(spark, tmp_path):
         ),
     }
     for name, op in ops.items():
-        n, outside = _jobs_in_group(spark, op, f"grp-{name}")
+        n, outside = jobs_in_group(spark, op, f"grp-{name}")
         assert n > 0 and outside == set(), (name, n, sorted(outside))

@@ -156,6 +156,13 @@ CHANGED_THIS_ROUND = [
     "dedup_novelty_indexed",
     "dedup_novelty_delete",
     "dedup_novelty_compacted",
+    # IVF-PQ probes score from one ADC-table literal; PQ and ANN probe
+    # reads take footer schemas and list only the hit directories
+    "ann_ivfpq_batch",
+    "ann_ivfpq_upsert",
+    "ann_store_probe",
+    "ann_probe_batch",
+    "ann_delete_ids",
 ]
 
 
