@@ -102,12 +102,14 @@ from pyspark.sql.types import (
 )
 
 from .similarity import (
+    _clustered,
     _commit_index_version,
     _committed_versions,
     _next_index_version,
     _parquet_rows,
     _read_manifest,
     _read_partitions,
+    _resolve_cdc,
     _run_overlapped,
     _write_manifest,
     brute_force_topk,
@@ -678,11 +680,15 @@ def _write_segment(
     ds: int,
     raw_id_buckets: int,
     metadata_cols=(),
+    shadow_ids: DataFrame | None = None,
 ) -> None:
     """Write one data segment: codes/seg=N (partitioned by ivf_cell),
     raw/seg=N (partitioned by id-hash bucket), ids/seg=N (the shadow
     sidecar — id list only, delta-sized). ``seg`` is an integer so
-    partition discovery types it and generation order is plain ``>``."""
+    partition discovery types it and generation order is plain ``>``.
+    ``shadow_ids`` (an ``id`` column) replaces ``src``'s ids in the
+    shadow sidecar: a CDC segment's also lists the ids it deletes,
+    which shadow older copies without a code or raw row."""
     schema = StructType(
         list(_CODES_SCHEMA.fields)
         + [src.schema[c] for c in metadata_cols]
@@ -698,10 +704,10 @@ def _write_segment(
     # the segment write phase was job-latency-bound, not byte-bound.
     def _w_codes() -> None:
         # cluster codes by cell before the partitioned write (same
-        # rationale as _w_raw: one task per cell dir, parallel file
-        # creation, never tasks×cells files)
+        # rationale as _w_raw: one file per cell dir, never tasks×cells
+        # files)
         n_cells = len(C_list)
-        encoded.repartition(n_cells, "ivf_cell").write.mode(
+        _clustered(encoded, n_cells, "ivf_cell").write.mode(
             "overwrite"
         ).option("maxRecordsPerFile", 8_000_000).partitionBy(
             "ivf_cell"
@@ -710,26 +716,27 @@ def _write_segment(
     # raw stays lean (id, vec): metadata lives with the codes, where
     # the where= filter runs — and compaction recovers it from there
     def _w_raw() -> None:
-        # pin the repartition width to the bucket count: without it the
-        # source's task layout decides, which either writes every
-        # bucket's file from ONE task serially (small inputs after AQE
-        # coalescing — measured 3.5-5.6 s of the sf0.1 build) or
-        # sprays tasks × buckets small files (large inputs). One task
-        # per bucket creates the 64 dirs in parallel and keeps exactly
-        # one file per bucket per segment; in-bucket file sizing at
-        # scale is the maxRecordsPerFile rollover.
-        src.select("id", "vec").withColumn(
-            "__rb", F.pmod(F.col("id"), F.lit(raw_id_buckets)).cast("int")
-        ).repartition(raw_id_buckets, "__rb").write.mode(
+        # hash-cluster on the bucket: without it the source's task
+        # layout decides, which sprays tasks × buckets small files on
+        # large inputs. Clustered, each bucket dir gets exactly one file
+        # per segment, written from min(buckets, cores) tasks (one task
+        # per bucket ran 64 near-empty tasks for a 12-row delta);
+        # in-bucket file sizing at scale is the maxRecordsPerFile
+        # rollover.
+        _clustered(
+            src.select("id", "vec").withColumn(
+                "__rb", F.pmod(F.col("id"), F.lit(raw_id_buckets)).cast("int")
+            ),
+            raw_id_buckets, "__rb",
+        ).write.mode(
             "overwrite"
         ).option("maxRecordsPerFile", 4_000_000).partitionBy("__rb").parquet(
             os.path.join(root, "raw", f"seg={seg}")
         )
 
     def _w_ids() -> None:
-        src.select("id").write.mode("overwrite").parquet(
-            os.path.join(root, "ids", f"seg={seg}")
-        )
+        ids = src.select("id") if shadow_ids is None else shadow_ids
+        ids.write.mode("overwrite").parquet(os.path.join(root, "ids", f"seg={seg}"))
 
     _run_overlapped(src.sparkSession, _w_codes, _w_raw, _w_ids)
 
@@ -914,7 +921,9 @@ def _train_pq(
     return C, CB, dim, n_fit, int(n_cells), int(k_pq)
 
 
-def upsert_ivfpq_store(vectors: DataFrame, root: str) -> IvfPqStore:
+def upsert_ivfpq_store(
+    vectors: DataFrame, root: str, delete_ids: DataFrame | None = None
+) -> IvfPqStore:
     """O(delta) IVF-PQ maintenance: encode ONLY the delta with the
     store's FROZEN quantizers (the classic FAISS ``add`` contract —
     coarse centroids and codebooks are fixed per train generation;
@@ -925,55 +934,95 @@ def upsert_ivfpq_store(vectors: DataFrame, root: str) -> IvfPqStore:
     (atomic CURRENT swap — concurrent readers keep their version).
     REPLACE semantics per id: the new segment's ``ids/`` sidecar
     shadows every older copy at serve time (last-wins, the LSM
-    discipline) — no base rewrite, no global re-encode. Returns a
-    fresh handle over the grown store."""
-    spark = vectors.sparkSession
-    store = IvfPqStore(spark, root)
-    meta = store.meta
-    C, CB = store._load_quantizers()
-    ds = meta["dim"] // meta["m"]
-    seg = _next_pq_segment(root)
-    mcols = tuple(meta.get("metadata_cols", ()))
-    src = vectors.select(
-        F.col(meta["id_col"]).cast("bigint").alias("id"),
-        F.col(meta["vec_col"]).alias("vec"),
-        *mcols,
-    ).dropDuplicates(["id"])  # two same-seg copies would BOTH be live
-    # (same generation — neither shadows the other); arbitrary winner,
-    # pre-dedup upstream with an ordering column when it matters
+    discipline) — no base rewrite, no global re-encode.
 
-    _write_segment(
-        src, root, seg, C.tolist(), CB.tolist(), ds, meta["raw_id_buckets"],
-        metadata_cols=mcols,
-    )
-    n = _parquet_rows(os.path.join(root, "ids", f"seg={seg}"))
-    manifest = dict(meta)
-    manifest["segments"] = list(meta["segments"]) + [seg]
-    manifest["seg_n"] = list(meta.get("seg_n", [-1] * len(meta["segments"]))) + [n]
-    return _commit_pq_version(spark, root, manifest)
+    ``delete_ids`` (a frame holding the store's id column) folds a CDC
+    batch's deletes into the SAME segment and version: its codes and
+    raw rows are the delta minus those ids and its ``ids/`` sidecar is
+    delta ∪ deletes, so an id the batch both upserts and deletes
+    resolves to DELETED. A batch whose every upsert is deleted commits
+    a tombstone segment. Returns a fresh handle over the grown store."""
+    return _commit_pq_segment(vectors.sparkSession, root, vectors, delete_ids)
 
 
 def delete_ivfpq_ids(spark, root: str, ids_df: DataFrame) -> IvfPqStore:
     """Row-level delete on the PQ store — a TOMBSTONE segment: an
     ``ids/`` sidecar with NO codes and NO raw payload, committed as a
-    new version. Last-wins shadowing then hides every older copy of
-    the id from probe/probe_batch (the tombstone itself is never a
-    data source — no codes dir exists for it, so no scan ever reads
-    it); a later upsert of the same id RESURRECTS it (its segment is
-    newer than the tombstone). O(delete set); the physical rows drop
-    at ``compact_ivfpq_store``. The takedown/GDPR path the at-rest
+    new version (the upsert writer with an empty delta). Last-wins
+    shadowing then hides every older copy of the id from
+    probe/probe_batch (the tombstone itself is never a data source —
+    no codes dir exists for it, so no scan ever reads it); a later
+    upsert of the same id RESURRECTS it (its segment is newer than the
+    tombstone). O(delete set); the physical rows drop at
+    ``compact_ivfpq_store``. The takedown/GDPR path the at-rest
     layouts all share (mirrors similarity.delete_ann_ids)."""
+    return _commit_pq_segment(spark, root, None, ids_df)
+
+
+def _commit_pq_segment(
+    spark, root: str, vectors: DataFrame | None, delete_ids: DataFrame | None
+) -> IvfPqStore:
+    """Write one segment holding ``vectors`` minus ``delete_ids`` that
+    shadows both, and commit it as one version. ``vectors=None``
+    writes a tombstone (an ``ids/`` sidecar alone)."""
     store = IvfPqStore(spark, root)
     meta = store.meta
     seg = _next_pq_segment(root)
-    ids_df.select(
-        F.col(meta["id_col"]).cast("bigint").alias("id")
-    ).write.mode("overwrite").parquet(os.path.join(root, "ids", f"seg={seg}"))
-    n = _parquet_rows(os.path.join(root, "ids", f"seg={seg}"))
+    ids_dir = os.path.join(root, "ids", f"seg={seg}")
+    deleted = None
+    if delete_ids is not None:
+        deleted = delete_ids.select(
+            F.col(meta["id_col"]).cast("bigint").alias("id")
+        )
+    if vectors is None:
+        deleted.write.mode("overwrite").parquet(ids_dir)
+    else:
+        C, CB = store._load_quantizers()
+        mcols = tuple(meta.get("metadata_cols", ()))
+        src = vectors.select(
+            F.col(meta["id_col"]).cast("bigint").alias("id"),
+            F.col(meta["vec_col"]).alias("vec"),
+            *mcols,
+        )
+        # one row per id: two same-seg copies would BOTH be live (same
+        # generation — neither shadows the other); arbitrary winner,
+        # pre-dedup upstream with an ordering column when it matters.
+        # A CDC segment's resolve (_resolve_cdc) collapses them in the
+        # same shuffle that drops its deleted ids.
+        shadow = None
+        if deleted is None:
+            src = src.dropDuplicates(["id"])
+        else:
+            res = _resolve_cdc(src, deleted, "id")
+            src = res.filter(~F.col("__del")).drop("__del")
+            shadow = res.select("id")
+        _write_segment(
+            src, root, seg, C.tolist(), CB.tolist(), meta["dim"] // meta["m"],
+            meta["raw_id_buckets"], metadata_cols=mcols, shadow_ids=shadow,
+        )
+    # footer-metadata counts (no Spark job)
+    n_ids = _parquet_rows(ids_dir)
+    if vectors is None:
+        n = 0
+    elif deleted is None:
+        n = n_ids
+    else:
+        # the codes pool: a footer read skips raw/'s `__rb=` dirs
+        n = _parquet_rows(os.path.join(root, "codes", f"seg={seg}"))
+    tomb = deleted is not None and n == 0
+    n_segs = len(meta["segments"])
     manifest = dict(meta)
     manifest["segments"] = list(meta["segments"]) + [seg]
-    manifest["seg_n"] = list(meta.get("seg_n", [-1] * len(meta["segments"]))) + [n]
-    manifest["tombstones"] = list(meta.get("tombstones", [])) + [seg]
+    manifest["seg_n"] = list(meta.get("seg_n", [-1] * n_segs)) + [
+        n_ids if tomb else n
+    ]
+    if tomb:
+        manifest["tombstones"] = list(meta.get("tombstones", [])) + [seg]
+    seg_del = list(meta.get("seg_deletes", [0] * n_segs)) + [
+        0 if tomb else n_ids - n
+    ]
+    if any(seg_del):
+        manifest["seg_deletes"] = seg_del
     return _commit_pq_version(spark, root, manifest)
 
 

@@ -105,6 +105,51 @@ def _run_overlapped(spark, *chains) -> None:
             fut.result()
 
 
+def _clustered(df: DataFrame, n_dirs: int, *cols: str) -> DataFrame:
+    """``df`` hash-partitioned on its partition columns ``cols`` before
+    a partitioned store write, in ``min(n_dirs, defaultParallelism)``
+    tasks (``n_dirs`` is how many partition directories the columns can
+    take). Each directory's rows land in one task, so it gets exactly
+    one file whatever the width. The width follows the cores, not the
+    directory count: a task costs ~30 ms on ``local[2]`` even when it
+    writes nothing, so a 12-row delta into 48 directories ran 48 tasks
+    for one core-second of scheduling. Where the cluster has at least
+    ``n_dirs`` cores the plan is the directory-count repartition it
+    replaces."""
+    width = min(int(n_dirs), df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(max(1, width), *cols)
+
+
+def _resolve_cdc(delta: DataFrame, deleted: DataFrame, id_col: str) -> DataFrame:
+    """One CDC batch resolved per id, in one shuffle: ``(id_col,
+    __del, *delta's other columns)``, one row per id of ``delta`` ∪
+    ``deleted`` (a frame holding ``id_col``). ``__del`` is true for an
+    id ``deleted`` names — a same-batch upsert and delete resolves to
+    deleted — and its data columns are then NULL; otherwise they are
+    one of the id's ``delta`` rows (arbitrary winner, the
+    ``dropDuplicates`` rule). A segment writer takes its data rows
+    (``~__del``) and its shadow ids (every row) from this one frame,
+    so neither side needs a distinct or a broadcast join."""
+    cols = [c for c in delta.columns if c != id_col]
+    up = delta.select(
+        id_col, F.lit(False).alias("__del"), F.struct(*cols).alias("__row")
+    )
+    gone = deleted.select(
+        id_col,
+        F.lit(True).alias("__del"),
+        F.lit(None).cast(up.schema["__row"].dataType).alias("__row"),
+    )
+    return (
+        up.unionByName(gone)
+        .groupBy(id_col)
+        .agg(
+            F.bool_or("__del").alias("__del"),
+            F.first("__row", ignorenulls=True).alias("__row"),
+        )
+        .select(id_col, "__del", *[F.col("__row")[c].alias(c) for c in cols])
+    )
+
+
 def _tokens(text: Column) -> Column:
     """The index tokenizer: lowercase, split on non-alphanumerics,
     drop empty tokens."""
@@ -652,8 +697,10 @@ class AnnStore:
         query side exposes. Duplicating small metadata n_tables
         times is the same trade the pointer copies already make."""
         (
-            self._assigned(vectors, tuple(metadata_cols))
-            .repartition(self.n_tables << self.bits, "table", "bucket")
+            _clustered(
+                self._assigned(vectors, tuple(metadata_cols)),
+                self.n_tables << self.bits, "table", "bucket",
+            )
             .write.mode("overwrite")
             .partitionBy("table", "bucket")
             .parquet(self.path)
@@ -733,9 +780,12 @@ class AnnStore:
         meta_cols = self._metadata_cols
         cols = [self.id_col, self.vec_col, *meta_cols, "table", "bucket"]
         (
-            kept.select(*cols)
-            .unionByName(self._assigned(delta_vectors, meta_cols).select(*cols))
-            .repartition(self.n_tables << self.bits, "table", "bucket")
+            _clustered(
+                kept.select(*cols).unionByName(
+                    self._assigned(delta_vectors, meta_cols).select(*cols)
+                ),
+                self.n_tables << self.bits, "table", "bucket",
+            )
             .write.mode("overwrite")
             .partitionBy("table", "bucket")
             .parquet(dst_path)
@@ -1088,7 +1138,9 @@ class AnnStore:
 
         return enc, dec
 
-    def write_quantized(self, vectors: DataFrame, raw_id_buckets: int = 64) -> None:
+    def write_quantized(
+        self, vectors: DataFrame, raw_id_buckets: int = 64, *, empty_ok: bool = False
+    ) -> None:
         """The quantized at-rest layout (r11 verdict #4): the
         n_tables-way-duplicated partitioned store holds SQ8 codes
         (1 byte/component instead of 4), the raw floats are stored
@@ -1106,7 +1158,9 @@ class AnnStore:
         ``raw/id_bucket=*/`` (id, vec), bounds in the metadata
         sidecar. Bounds are corpus-global and frozen at write time —
         appending vectors outside them is a rebuild decision, hence
-        ``upsert`` refuses quantized stores."""
+        ``upsert`` refuses quantized stores. ``empty_ok`` writes nothing
+        for an empty ``vectors`` instead of refusing it (a CDC segment
+        whose upserts its own batch deleted)."""
         spark = self.spark
         base = vectors.select(self.id_col, self.vec_col)
         # per-dimension min/max: one bounded shuffle (≤ dim groups),
@@ -1119,6 +1173,8 @@ class AnnStore:
             .collect()
         )
         by_dim = {r["__d"]: (float(r.mn), float(r.mx)) for r in bounds}
+        if not by_dim and empty_ok:
+            return
         dim = len(by_dim)
         if dim < self.min_dim:
             raise ValueError(
@@ -1140,11 +1196,13 @@ class AnnStore:
         # stragglers instead of waiting for them)
         def _write_codes() -> None:
             (
-                self._assigned(base)
-                .select(
-                    self.id_col, enc(F.col(self.vec_col)).alias("code"), "table", "bucket"
+                _clustered(
+                    self._assigned(base).select(
+                        self.id_col, enc(F.col(self.vec_col)).alias("code"),
+                        "table", "bucket",
+                    ),
+                    self.n_tables << self.bits, "table", "bucket",
                 )
-                .repartition(self.n_tables << self.bits, "table", "bucket")
                 .write.mode("overwrite")
                 .partitionBy("table", "bucket")
                 .parquet(self.path.rstrip("/") + "/codes")
@@ -1152,11 +1210,15 @@ class AnnStore:
 
         def _write_raw() -> None:
             (
-                base.withColumn(
-                    "id_bucket",
-                    F.pmod(F.xxhash64(F.col(self.id_col)), F.lit(raw_id_buckets)).cast("int"),
+                _clustered(
+                    base.withColumn(
+                        "id_bucket",
+                        F.pmod(
+                            F.xxhash64(F.col(self.id_col)), F.lit(raw_id_buckets)
+                        ).cast("int"),
+                    ),
+                    raw_id_buckets, "id_bucket",
                 )
-                .repartition("id_bucket")
                 .write.mode("overwrite")
                 .partitionBy("id_bucket")
                 .parquet(self.path.rstrip("/") + "/raw")
@@ -1731,10 +1793,58 @@ def build_postings_index(
     a cheap stats projection; at 100 TB that is exactly the pass a
     production engine amortizes across every batch served.
     """
+    _write_postings_segment(docs_df, index_dir, text_col, id_col, buckets, positions)
+
+
+#: the doclens ``dl`` of an id a segment deletes instead of holding: it
+#: shadows older segments' copies but is no document. A real ``dl`` is a
+#: token count (>= 0), or NULL for a document whose text is NULL.
+_DELETED_DL = -1
+
+
+def _is_doc(dl: Column) -> Column:
+    """True on a doclens row that is a document, not a delete marker."""
+    return dl.isNull() | (dl >= F.lit(0))
+
+
+def _write_postings_segment(
+    docs_df: DataFrame,
+    index_dir: str,
+    text_col: str,
+    id_col: str,
+    buckets: int,
+    positions: bool,
+    deleted: DataFrame | None = None,
+) -> None:
+    """The four ``build_postings_index`` tables under ``index_dir``.
+    ``deleted`` (a ``doc_id`` column) makes it a CDC segment
+    (``_resolve_cdc``): its documents are ``docs_df`` minus those ids,
+    one per id, and the ids land in doclens/ with ``dl =
+    _DELETED_DL``, so the segment shadows older copies of them without
+    counting them as documents in its stats."""
     base = docs_df.select(
         F.col(id_col).alias("doc_id"),
         _tokens(F.col(text_col)).alias("__w"),
     ).withColumn("dl", F.size("__w"))
+    lens = base.select("doc_id", "dl")
+    if deleted is not None:
+        res = _resolve_cdc(
+            docs_df.select(
+                F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")
+            ),
+            deleted,
+            "doc_id",
+        ).withColumn("__w", _tokens(F.col("__text")))
+        base = res.filter(~F.col("__del")).select(
+            "doc_id", "__w", F.size("__w").alias("dl")
+        )
+        lens = res.select(
+            "doc_id",
+            F.when(F.col("__del"), F.lit(_DELETED_DL))
+            .otherwise(F.size("__w"))
+            .cast("int")
+            .alias("dl"),
+        )
     postings = _postings_of(base, buckets, positions)
     spark = docs_df.sparkSession
 
@@ -1749,9 +1859,10 @@ def build_postings_index(
         # bucket then lives in exactly one task, so each bucket=N/ dir
         # is ONE parquet file instead of one per shuffle partition — a
         # pruned query batch opens ~|hit buckets| files, not 32x that
-        # (measured 2.4 s -> 0.9 s per batch at sf0.1). One extra
-        # build-time exchange, amortized over every batch served.
-        postings.repartition(buckets, "bucket").write.mode(
+        # (measured 2.4 s -> 0.9 s per batch at sf0.1). The width is
+        # the cores, not the bucket count (_clustered): a small delta
+        # pays no near-empty task per bucket.
+        _clustered(postings, buckets, "bucket").write.mode(
             "overwrite"
         ).partitionBy("bucket").parquet(index_dir.rstrip("/") + "/postings")
         _write_terms_from_postings(
@@ -1759,9 +1870,7 @@ def build_postings_index(
         )
 
     def _chain_doclens() -> None:
-        base.select("doc_id", "dl").write.mode("overwrite").parquet(
-            index_dir.rstrip("/") + "/doclens"
-        )
+        lens.write.mode("overwrite").parquet(index_dir.rstrip("/") + "/doclens")
         _write_index_stats(spark, index_dir, buckets, positions)
 
     _run_overlapped(spark, _chain_postings, _chain_doclens)
@@ -1788,12 +1897,12 @@ def _write_terms_from_postings(
     written = spark.read.schema(post_schema).parquet(
         index_dir.rstrip("/") + "/postings"
     )
-    w = (
-        written.groupBy("bucket", "term")
-        .agg(F.count(F.lit(1)).cast("int").alias("df"))
-        .repartition(buckets, "bucket")
-        .write.mode("overwrite")
-    )
+    w = _clustered(
+        written.groupBy("bucket", "term").agg(
+            F.count(F.lit(1)).cast("int").alias("df")
+        ),
+        buckets, "bucket",
+    ).write.mode("overwrite")
     if max_records_per_file is not None:
         w = w.option("maxRecordsPerFile", max_records_per_file)
     w.partitionBy("bucket").parquet(index_dir.rstrip("/") + "/terms")
@@ -1820,12 +1929,15 @@ def _write_index_stats(
     spark, index_dir: str, buckets: int, positions: bool = False
 ) -> None:
     """stats/ from the WRITTEN doclens table — shared by build and
-    upsert so the two paths cannot disagree on what n/avgdl mean."""
+    upsert so the two paths cannot disagree on what n/avgdl mean.
+    Delete markers (``_DELETED_DL``) are no documents: they count in
+    neither n_docs nor avgdl."""
+    doc = _is_doc(F.col("dl"))
     (
         spark.read.parquet(index_dir.rstrip("/") + "/doclens")
         .agg(
-            F.count(F.lit(1)).cast("double").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
+            F.count(F.when(doc, 1)).cast("double").alias("n_docs"),
+            F.avg(F.when(doc, F.col("dl"))).alias("avgdl"),
         )
         .withColumn("buckets", F.lit(buckets))
         .withColumn("positional", F.lit(bool(positions)))
@@ -1886,9 +1998,10 @@ def upsert_postings_index(
     # (guide §2.6): [postings fold → terms] and [doclens fold → stats]
     def _chain_postings() -> None:
         (
-            kept.select(*post_cols)
-            .unionByName(delta_post.select(*post_cols))
-            .repartition(buckets, "bucket")
+            _clustered(
+                kept.select(*post_cols).unionByName(delta_post.select(*post_cols)),
+                buckets, "bucket",
+            )
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(dst + "/postings")
@@ -2259,7 +2372,14 @@ class IndexReader:
     is never read as a data source, but its ids join every older
     segment's shadow set, so the delete rides the exact machinery
     replacement already uses. Compaction reads the resolved view, so
-    the fold drops both the shadowed rows and the tombstone itself."""
+    the fold drops both the shadowed rows and the tombstone itself.
+    A CDC batch's segment is a data segment whose doclens/ also holds
+    the batch's delete ids as ``_DELETED_DL`` markers: they join the
+    shadow set like a tombstone's ids and are left out of the logical
+    doclens.
+
+    ``index_dir`` may also be a managed root; the reader then serves
+    the version its ``CURRENT`` names."""
 
     def __init__(self, spark, index_dir: str, *, version: str | None = None):
         import os
@@ -2271,8 +2391,20 @@ class IndexReader:
             # never-committed names loudly — resolve_version_dir)
             index_dir = resolve_version_dir(index_dir.rstrip("/"), version)
         root = index_dir.rstrip("/")
-        self.root = root
         m = _read_manifest(root)
+        if m is None and not os.path.isdir(root + "/stats"):
+            # a managed root serves the version its CURRENT names
+            _require_local_path(root)
+            cur = index_current_path(root)
+            if cur is None:
+                raise FileNotFoundError(
+                    f"{root!r} is not a postings index: it holds neither "
+                    "MANIFEST.json nor stats/ (an index version) nor a "
+                    "CURRENT pointer to a live version (a managed root)"
+                )
+            root = cur.rstrip("/")
+            m = _read_manifest(root)
+        self.root = root
         if m is None:
             stats_row = _stats_local(root + "/stats")
             self.buckets = int(stats_row["buckets"])
@@ -2282,6 +2414,7 @@ class IndexReader:
             self.seg_paths = [root]
             self.seg_n_docs = [int(self.n_docs)]
             self.seg_tomb = [False]
+            self.seg_n_del = [0]
         else:
             base = os.path.dirname(root)  # the managed root
             self.buckets = int(m["buckets"])
@@ -2293,6 +2426,9 @@ class IndexReader:
             self.seg_tomb = [
                 bool(x)
                 for x in m.get("tombstones", [False] * len(self.seg_paths))
+            ]
+            self.seg_n_del = [
+                int(x) for x in m.get("seg_deletes", [0] * len(self.seg_paths))
             ]
 
     def _first_data_path(self) -> str:
@@ -2334,7 +2470,7 @@ class IndexReader:
             if i > 0:
                 ids = self._segment_doclens(self.seg_paths[i]).select("doc_id")
                 shadow = ids if shadow is None else shadow.unionByName(ids)
-                shadow_n += self.seg_n_docs[i]
+                shadow_n += self.seg_n_docs[i] + self.seg_n_del[i]
         if not outs:
             self._first_data_path()  # raises the named invariant
         out = outs[0]
@@ -2370,13 +2506,19 @@ class IndexReader:
 
     def _segment_doclens(self, seg: str) -> DataFrame:
         """One segment's doclens/ (doc_id, dl), read with its footer
-        schema — no schema-inference job per read."""
+        schema — no schema-inference job per read. Its ids, delete
+        markers included, are the segment's shadow set."""
         return _read_partitions(self.spark, seg + "/doclens")
 
     def doclens(self) -> DataFrame:
         """The logical (doc_id, dl) table — 1 row/doc, 2 columns: the
-        cheap substrate for exact stats maintenance."""
-        return self._resolved(lambda p: self._segment_doclens(p).select("doc_id", "dl"))
+        cheap substrate for exact stats maintenance. Delete markers
+        shadow older segments but are no rows of it."""
+        return self._resolved(
+            lambda p: self._segment_doclens(p)
+            .filter(_is_doc(F.col("dl")))
+            .select("doc_id", "dl")
+        )
 
     def term_postings(self, terms: list[str], hit_buckets: list[int]) -> DataFrame:
         """(__t, doc_id, __tf, __dl) — the resolved postings of
@@ -2446,6 +2588,7 @@ def upsert_postings_index_versioned(
     root: str,
     text_col: str = "text",
     id_col: str = "doc_id",
+    delete_ids: DataFrame | None = None,
 ) -> str:
     """O(delta) incremental index maintenance (r12 verdict #1): the
     delta corpus is tokenized and written as a NEW SEGMENT (same
@@ -2456,6 +2599,15 @@ def upsert_postings_index_versioned(
     newer-segment id anti-join), so upsert ≡ rebuild over
     (old corpus minus replaced ids, plus delta) — the
     ``rank_bm25_index_upsert`` driver oracle, unchanged.
+
+    ``delete_ids`` (a frame holding ``id_col``) folds a CDC batch's
+    deletes into the SAME segment and version: its data rows are the
+    delta minus those ids, and its shadow set is delta ∪ deletes, so
+    an id the batch both upserts and deletes resolves to DELETED and a
+    reader never sees half a batch. One shuffle resolves it
+    (``_resolve_cdc``), which also keeps one delta row per id, so the
+    uniqueness precondition below does not apply. A batch whose every
+    upsert is deleted commits a tombstone segment.
 
     Cost: delta tokenize + delta write + ONE pass over the doclens
     tables (1 row/doc, 2 columns — ~10^-4 of postings bytes) for
@@ -2468,56 +2620,9 @@ def upsert_postings_index_versioned(
 
     Reference anchor: ``add_documents`` is O(delta) against a live
     service (reference pipeline.py P:341–349)."""
-    import os
-
-    spark = delta_docs.sparkSession
-    src = index_current_path(root)
-    if src is None:
-        raise FileNotFoundError(f"no CURRENT index version under {root!r}")
-    reader = IndexReader(spark, src)
-    seg_name = _next_segment_name(root)
-    seg = os.path.join(root, "segments", seg_name)
-    build_postings_index(
-        delta_docs,
-        seg,
-        text_col=text_col,
-        id_col=id_col,
-        buckets=reader.buckets,
-        positions=reader.positional,
+    return _commit_postings_segment(
+        delta_docs.sparkSession, root, delta_docs, delete_ids, text_col, id_col
     )
-    st = _stats_local(seg + "/stats")
-    n_delta = int(st["n_docs"])
-    # exact global stats: (old logical doclens minus replaced ids) ∪
-    # delta doclens, aggregated — the same count/avg the rebuild's
-    # _write_index_stats computes, over the same logical rows
-    delta_dl = spark.read.parquet(seg + "/doclens").select("doc_id", "dl")
-    delta_ids = delta_dl.select("doc_id")
-    kept = reader.doclens().join(
-        F.broadcast(delta_ids) if n_delta <= BROADCAST_MAX_IDS else delta_ids,
-        "doc_id",
-        "left_anti",
-    )
-    row = (
-        kept.unionByName(delta_dl)
-        .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("a"))
-        .collect()[0]
-    )
-    rels = [os.path.relpath(p, root) for p in reader.seg_paths]
-    name = _next_index_version(root)
-    _write_manifest(
-        os.path.join(root, name),
-        {
-            "segments": rels + [f"segments/{seg_name}"],
-            "buckets": reader.buckets,
-            "positional": reader.positional,
-            "n_docs": int(row["n"]),
-            "avgdl": float(row["a"] or 0.0),
-            "seg_n_docs": reader.seg_n_docs + [n_delta],
-            "tombstones": reader.seg_tomb + [False],
-        },
-    )
-    _commit_index_version(root, name)
-    return os.path.join(root, name)
 
 
 def delete_index_ids(ids_df: DataFrame, root: str, id_col: str = "doc_id") -> str:
@@ -2525,60 +2630,92 @@ def delete_index_ids(ids_df: DataFrame, root: str, id_col: str = "doc_id") -> st
     #2: takedown / GDPR / robots-revocation compliance — S10's
     collection-level delete, reference Q:119–136, cannot remove ONE
     document without rewriting the collection). Writes a
-    TOMBSTONE-ONLY segment: a doclens/ id list with an empty data
-    payload, flagged in the manifest's ``tombstones`` list. The
-    existing last-wins shadow machinery then hides every older copy
-    of the ids — a delete is exactly a replacement with nothing —
-    while the reader never treats the tombstone as a data source, so
-    the doomed ids vanish from bm25/bool/phrase serving AND from the
-    logical doclens (n_docs/avgdl recomputed exactly here, the upsert
-    discipline). ``compact_index`` reads the resolved view, so the
-    next fold physically drops the shadowed rows and the tombstone
-    itself. O(delete set): the live index is never rewritten; ids not
-    present in the index are harmless no-ops. Returns the new version
-    path."""
+    TOMBSTONE-ONLY segment: a doclens/ id list of delete markers with
+    no data payload, flagged in the manifest's ``tombstones`` list —
+    the upsert writer with an empty delta. The existing last-wins
+    shadow machinery then hides every older copy of the ids — a
+    delete is exactly a replacement with nothing — while the reader
+    never treats the tombstone as a data source, so the doomed ids
+    vanish from bm25/bool/phrase serving AND from the logical doclens
+    (n_docs/avgdl recomputed exactly here, the upsert discipline).
+    ``compact_index`` reads the resolved view, so the next fold
+    physically drops the shadowed rows and the tombstone itself.
+    O(delete set): the live index is never rewritten; ids not present
+    in the index are harmless no-ops. Returns the new version path."""
+    return _commit_postings_segment(
+        ids_df.sparkSession, root, None, ids_df, "text", id_col
+    )
+
+
+def _commit_postings_segment(
+    spark,
+    root: str,
+    delta_docs: DataFrame | None,
+    delete_ids: DataFrame | None,
+    text_col: str,
+    id_col: str,
+) -> str:
+    """Write one segment holding ``delta_docs`` minus ``delete_ids``
+    that shadows both, and commit it as one version with exact
+    n_docs/avgdl. ``delta_docs=None`` writes a tombstone."""
     import os
 
-    spark = ids_df.sparkSession
     src = index_current_path(root)
     if src is None:
         raise FileNotFoundError(f"no CURRENT index version under {root!r}")
     reader = IndexReader(spark, src)
-    ids = ids_df.select(F.col(id_col).alias("doc_id")).distinct()
     seg_name = _next_segment_name(root)
     seg = os.path.join(root, "segments", seg_name)
-    # dl=0 keeps the doclens schema uniform (INT since r18's
-    # narrow-types pass); the column is never read (tombstones are
-    # shadow-only, skipped as data sources)
-    ids.withColumn("dl", F.lit(0).cast("int")).write.mode("overwrite").parquet(
-        seg + "/doclens"
-    )
-    doomed = spark.read.parquet(seg + "/doclens").select("doc_id")
-    # footer-metadata count of the tombstone just written (the r17
-    # _parquet_rows store-commit treatment, guide §1/§5) — the ids are
-    # distinct by construction, so file row count == |delete set|; the
-    # old ``doomed.count()`` was one full Spark job per delete
-    n_del = _parquet_rows(seg + "/doclens")
+    deleted = None
+    if delete_ids is not None:
+        deleted = delete_ids.select(F.col(id_col).alias("doc_id"))
+    if delta_docs is None:
+        deleted.distinct().withColumn(
+            "dl", F.lit(_DELETED_DL).cast("int")
+        ).write.mode("overwrite").parquet(seg + "/doclens")
+        n_docs = 0
+    else:
+        _write_postings_segment(
+            delta_docs, seg, text_col, id_col, reader.buckets,
+            reader.positional, deleted=deleted,
+        )
+        n_docs = int(_stats_local(seg + "/stats")["n_docs"])
+    # footer-metadata count (no Spark job): every id the segment
+    # shadows, documents and delete markers alike
+    n_ids = _parquet_rows(seg + "/doclens")
+    tomb = deleted is not None and n_docs == 0
+    # exact global stats: (old logical doclens minus the segment's
+    # shadow set) ∪ its documents, aggregated — the same count/avg the
+    # rebuild's _write_index_stats computes, over the same logical rows
+    seg_dl = _read_partitions(spark, seg + "/doclens")
+    shadow = seg_dl.select("doc_id")
     kept = reader.doclens().join(
-        F.broadcast(doomed) if n_del <= BROADCAST_MAX_IDS else doomed,
+        F.broadcast(shadow) if n_ids <= BROADCAST_MAX_IDS else shadow,
         "doc_id",
         "left_anti",
     )
-    row = kept.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("a")).collect()[0]
-    rels = [os.path.relpath(p, root) for p in reader.seg_paths]
-    name = _next_index_version(root)
-    _write_manifest(
-        os.path.join(root, name),
-        {
-            "segments": rels + [f"segments/{seg_name}"],
-            "buckets": reader.buckets,
-            "positional": reader.positional,
-            "n_docs": int(row["n"]),
-            "avgdl": float(row["a"] or 0.0),
-            "seg_n_docs": reader.seg_n_docs + [n_del],
-            "tombstones": reader.seg_tomb + [True],
-        },
+    row = (
+        kept.unionByName(seg_dl.filter(_is_doc(F.col("dl"))).select("doc_id", "dl"))
+        .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("a"))
+        .collect()[0]
     )
+    rels = [os.path.relpath(p, root) for p in reader.seg_paths]
+    manifest = {
+        "segments": rels + [f"segments/{seg_name}"],
+        "buckets": reader.buckets,
+        "positional": reader.positional,
+        "n_docs": int(row["n"]),
+        "avgdl": float(row["a"] or 0.0),
+        # a tombstone's count is its id count; a data segment's is its
+        # documents, with the ids it only deletes in seg_deletes
+        "seg_n_docs": reader.seg_n_docs + [n_ids if tomb else n_docs],
+        "tombstones": reader.seg_tomb + [tomb],
+    }
+    seg_del = reader.seg_n_del + [0 if tomb else n_ids - n_docs]
+    if any(seg_del):
+        manifest["seg_deletes"] = seg_del
+    name = _next_index_version(root)
+    _write_manifest(os.path.join(root, name), manifest)
     _commit_index_version(root, name)
     return os.path.join(root, name)
 
@@ -2595,7 +2732,7 @@ def compact_index(
     directories and the live version's files carry whatever sizes
     the upsert shuffles produced. ``compact_index`` rewrites the
     live version into a new one with size-targeted files (postings/
-    terms re-clustered one-task-per-bucket, huge buckets split at
+    terms hash-clustered to one file per bucket, huge buckets split at
     ``max_records_per_file``; doclens bin-packed to the same
     target), commits the pointer, then drops every version directory
     except the ``retain`` most recent — the Delta/Iceberg
@@ -2637,8 +2774,7 @@ def compact_index(
     # fold was the last store mutation still serializing its chains.
     def _chain_postings() -> None:
         (
-            reader.postings()
-            .repartition(buckets, "bucket")
+            _clustered(reader.postings(), buckets, "bucket")
             .write.mode("overwrite")
             .option("maxRecordsPerFile", max_records_per_file)
             .partitionBy("bucket")
@@ -2878,8 +3014,23 @@ class SegmentedAnnStore(AnnStore):
             bool(x)
             for x in manifest.get("tombstones", [False] * len(self.seg_paths))
         ]
+        self.seg_n_del = [
+            int(x) for x in manifest.get("seg_deletes", [0] * len(self.seg_paths))
+        ]
         self._metadata_cols = tuple(manifest.get("metadata_cols", ()))
         self._quant = manifest.get("quant")
+
+    def _seg_data_ids(self, seg: str) -> DataFrame:
+        """The ids a data segment holds vectors for — its ``ids/``
+        sidecar minus the ids a CDC segment only deletes: the raw
+        sidecar of an SQ8 segment, else the table-0 slice (every vector
+        has one pointer copy per table)."""
+        data = _ann_seg_data_dir(seg)
+        if self._quant:
+            return _read_partitions(
+                self.spark, data + "/raw", partitions=("id_bucket",)
+            ).select(self.id_col)
+        return _read_partitions(self.spark, data, {"table": [0]}).select(self.id_col)
 
     def _seg_ids(self, seg: str) -> DataFrame:
         import os
@@ -2954,7 +3105,7 @@ class SegmentedAnnStore(AnnStore):
             if i > 0:
                 ids = self._seg_ids(self.seg_paths[i])
                 shadow = ids if shadow is None else shadow.unionByName(ids)
-                shadow_n += self.seg_n[i]
+                shadow_n += self.seg_n[i] + self.seg_n_del[i]
 
     def _shadowed(self, per_seg) -> DataFrame:
         """Union of ``_shadow_iter`` — the whole resolved view in one
@@ -3107,6 +3258,7 @@ def _write_ann_segment(
     metadata_cols: tuple[str, ...],
     quantized: bool = False,
     raw_id_buckets: int = 64,
+    deleted: DataFrame | None = None,
     **kw,
 ) -> int:
     """One ANN segment: the partitioned store under ``data/`` plus the
@@ -3116,8 +3268,12 @@ def _write_ann_segment(
     with bounds computed from THIS segment's vectors alone — the
     per-segment-bounds contract that makes quantized upsert possible
     without global re-quantization (bounds live in the segment's own
-    ``_ann_meta.json``). Returns the segment's vector count (read
-    back from the tiny sidecar — no extra pass over the vectors)."""
+    ``_ann_meta.json``). ``deleted`` (a frame holding the id column)
+    makes it a CDC segment (``_resolve_cdc``): its vectors are
+    ``vectors`` minus those ids, one per id, and ``ids/`` lists both,
+    so the segment shadows older copies of the deleted ids without
+    holding a vector. Returns the ``ids/`` row count (read back from
+    the tiny sidecar's footers — no extra pass over the vectors)."""
     import os
 
     spark = vectors.sparkSession
@@ -3128,21 +3284,38 @@ def _write_ann_segment(
             "filtered search needs the raw-float layout"
         )
     ids_dir = os.path.join(seg, "ids")
+    ids = vectors.select(store.id_col)
+    if deleted is not None:
+        res = _resolve_cdc(vectors, deleted, store.id_col)
+        vectors = res.filter(~F.col("__del")).drop("__del")
+        ids = res.select(store.id_col)
 
     # data store and ids sidecar are independent writes over the same
     # source — overlap them (r18 guide §2.6, same pool discipline as
     # the index build chains)
     def _write_data() -> None:
         if quantized:
-            store.write_quantized(vectors, raw_id_buckets=int(raw_id_buckets))
+            store.write_quantized(
+                vectors, raw_id_buckets=int(raw_id_buckets),
+                empty_ok=deleted is not None,
+            )
         else:
             store.write(vectors, metadata_cols=metadata_cols)
 
     def _write_ids() -> None:
-        vectors.select(store.id_col).write.mode("overwrite").parquet(ids_dir)
+        ids.write.mode("overwrite").parquet(ids_dir)
 
     _run_overlapped(spark, _write_data, _write_ids)
     return _parquet_rows(ids_dir)
+
+
+def _ann_data_rows(seg: str, quantized: bool) -> int:
+    """Vectors a written segment holds, from footers (no Spark job):
+    its raw sidecar's rows (SQ8) or its table-0 slice's."""
+    import os
+
+    data = os.path.join(seg, "data")
+    return _parquet_rows(os.path.join(data, "raw" if quantized else "table=0"))
 
 
 def _ann_manifest(
@@ -3152,11 +3325,14 @@ def _ann_manifest(
     metadata_cols,
     quantized: bool,
     tombstones: list[bool] | None = None,
+    seg_deletes: list[int] | None = None,
 ) -> dict:
     """The version-manifest dict — one builder for every writer (r13
     review: five hand-built literals had already started drifting).
     ``tombstones`` flags shadow-only segments (row-level delete);
-    omitted means all-data."""
+    omitted means all-data. ``seg_deletes`` counts the ids a CDC data
+    segment shadows without holding (``seg_n`` counts its vectors);
+    omitted means none."""
     m = {
         "segments": segments,
         "seg_n": seg_n,
@@ -3168,6 +3344,8 @@ def _ann_manifest(
     }
     if tombstones is not None and any(tombstones):
         m["tombstones"] = [bool(x) for x in tombstones]
+    if seg_deletes is not None and any(seg_deletes):
+        m["seg_deletes"] = [int(x) for x in seg_deletes]
     if quantized:
         # flag only — bounds are per segment, self-described in each
         # segment's _ann_meta.json and restored by AnnStore.open
@@ -3241,7 +3419,9 @@ def write_ann_store_versioned(
     )
 
 
-def upsert_ann_store_versioned(delta_vectors: DataFrame, root: str) -> AnnStore:
+def upsert_ann_store_versioned(
+    delta_vectors: DataFrame, root: str, delete_ids: DataFrame | None = None
+) -> AnnStore:
     """O(delta) incremental vector-index maintenance (r12 verdict #1):
     the delta is sign-bucketed and written as a NEW SEGMENT (same
     geometry, read from the live version's manifest/sidecar — never
@@ -3256,11 +3436,45 @@ def upsert_ann_store_versioned(delta_vectors: DataFrame, root: str) -> AnnStore:
     decision — an upsert never deletes. Precondition: ``id_col``
     unique within the delta (latest embed wins — dedup upstream).
 
+    ``delete_ids`` (a frame holding the store's id column) folds a CDC
+    batch's deletes into the SAME segment and version: its vectors are
+    the delta minus those ids and its ``ids/`` sidecar is delta ∪
+    deletes, so an id the batch both upserts and deletes resolves to
+    DELETED. One shuffle resolves it (``_resolve_cdc``), which also
+    keeps one delta row per id. A batch whose every upsert is deleted
+    commits a tombstone segment.
+
     Reference anchor: ``add_documents`` is O(delta) against a live
     vector store (reference pipeline.py P:341–349)."""
+    return _commit_ann_segment(
+        delta_vectors.sparkSession, root, delta_vectors, delete_ids
+    )
+
+
+def delete_ann_ids(ids_df: DataFrame, root: str) -> AnnStore:
+    """Row-level delete for the managed ANN root (r13 verdict #2 —
+    the vector half of takedown compliance): a TOMBSTONE segment
+    holding only an ``ids/`` sidecar (no data dir), flagged in the
+    manifest — the upsert writer with an empty delta. Serving's
+    last-wins shadow machinery then anti-joins the doomed ids out of
+    every older segment — a delete is a replacement with nothing — in
+    ALL read paths (probe, batch, quantized, filtered, drift: a
+    deleted id surfaces as ``removed`` in ``ann_version_drift``).
+    ``compact_ann_store`` reads the resolved view, so the next fold
+    physically drops the rows and the tombstone. O(delete set); ids
+    not in the store are harmless no-ops. Returns the new serving
+    handle."""
+    return _commit_ann_segment(ids_df.sparkSession, root, None, ids_df)
+
+
+def _commit_ann_segment(
+    spark, root: str, delta: DataFrame | None, delete_ids: DataFrame | None
+) -> AnnStore:
+    """Write one segment holding ``delta`` minus ``delete_ids`` that
+    shadows both, and commit it as one version. ``delta=None`` writes
+    a tombstone (an ``ids/`` sidecar alone)."""
     import os
 
-    spark = delta_vectors.sparkSession
     src = index_current_path(root)
     if src is None:
         raise FileNotFoundError(f"no CURRENT store version under {root!r}")
@@ -3269,87 +3483,50 @@ def upsert_ann_store_versioned(delta_vectors: DataFrame, root: str) -> AnnStore:
     meta_cols = tuple(live._metadata_cols)
     seg_name = _next_segment_name(root)
     seg = os.path.join(root, "segments", seg_name)
-    n = _write_ann_segment(
-        delta_vectors,
-        seg,
-        meta_cols,
-        # a quantized delta segment computes ITS OWN SQ8 bounds (and
-        # keeps them in its sidecar) — the base is never re-quantized;
-        # probe decodes each segment with the bounds it was written
-        # under, so bounds drift between generations is handled, not
-        # a rebuild trigger
-        quantized=quantized,
-        bits=live.bits,
-        n_tables=live.n_tables,
-        id_col=live.id_col,
-        vec_col=live.vec_col,
-    )
+    deleted = None
+    if delete_ids is not None:
+        deleted = delete_ids.select(live.id_col)
+    if delta is None:
+        deleted.distinct().write.mode("overwrite").parquet(os.path.join(seg, "ids"))
+        n_ids = _parquet_rows(os.path.join(seg, "ids"))
+        n = 0
+    else:
+        n_ids = _write_ann_segment(
+            delta,
+            seg,
+            meta_cols,
+            # a quantized delta segment computes ITS OWN SQ8 bounds (and
+            # keeps them in its sidecar) — the base is never
+            # re-quantized; probe decodes each segment with the bounds
+            # it was written under, so bounds drift between generations
+            # is handled, not a rebuild trigger
+            quantized=quantized,
+            deleted=deleted,
+            bits=live.bits,
+            n_tables=live.n_tables,
+            id_col=live.id_col,
+            vec_col=live.vec_col,
+        )
+        n = n_ids if deleted is None else _ann_data_rows(seg, quantized)
+    tomb = deleted is not None and n == 0
     if isinstance(live, SegmentedAnnStore):
         rels = [os.path.relpath(p, root) for p in live.seg_paths]
-        seg_n = live.seg_n
-        tomb = live.seg_tomb
+        seg_n, tombs, dels = live.seg_n, live.seg_tomb, live.seg_n_del
     else:  # legacy monolithic version becomes the base segment
         rels = [os.path.relpath(src, root)]
         seg_n = [-1]  # unknown base count: only NEWER counts gate broadcasts
-        tomb = [False]
+        tombs, dels = [False], [0]
     return _commit_ann_version(
         spark,
         root,
         _ann_manifest(
             rels + [f"segments/{seg_name}"],
-            seg_n + [n],
+            seg_n + [n_ids if tomb else n],
             live,
             meta_cols,
             quantized,
-            tombstones=tomb + [False],
-        ),
-    )
-
-
-def delete_ann_ids(ids_df: DataFrame, root: str) -> AnnStore:
-    """Row-level delete for the managed ANN root (r13 verdict #2 —
-    the vector half of takedown compliance): a TOMBSTONE segment
-    holding only an ``ids/`` sidecar (no data dir), flagged in the
-    manifest. Serving's last-wins shadow machinery then anti-joins
-    the doomed ids out of every older segment — a delete is a
-    replacement with nothing — in ALL read paths (probe, batch,
-    quantized, filtered, drift: a deleted id surfaces as ``removed``
-    in ``ann_version_drift``). ``compact_ann_store`` reads the
-    resolved view, so the next fold physically drops the rows and
-    the tombstone. O(delete set); ids not in the store are harmless
-    no-ops. Returns the new serving handle."""
-    import os
-
-    spark = ids_df.sparkSession
-    src = index_current_path(root)
-    if src is None:
-        raise FileNotFoundError(f"no CURRENT store version under {root!r}")
-    live = _open_ann_version(spark, src)
-    quantized = bool(getattr(live, "_quant", None))
-    seg_name = _next_segment_name(root)
-    seg = os.path.join(root, "segments", seg_name)
-    ids_df.select(live.id_col).distinct().write.mode("overwrite").parquet(
-        os.path.join(seg, "ids")
-    )
-    n = _parquet_rows(os.path.join(seg, "ids"))
-    if isinstance(live, SegmentedAnnStore):
-        rels = [os.path.relpath(p, root) for p in live.seg_paths]
-        seg_n = live.seg_n
-        tomb = live.seg_tomb
-    else:
-        rels = [os.path.relpath(src, root)]
-        seg_n = [-1]
-        tomb = [False]
-    return _commit_ann_version(
-        spark,
-        root,
-        _ann_manifest(
-            rels + [f"segments/{seg_name}"],
-            seg_n + [n],
-            live,
-            tuple(live._metadata_cols),
-            quantized,
-            tombstones=tomb + [True],
+            tombstones=tombs + [tomb],
+            seg_deletes=dels + [0 if tomb else n_ids - n],
         ),
     )
 
@@ -3408,8 +3585,10 @@ def compact_ann_store(spark, root: str, retain: int = 2) -> AnnStore:
             retain=retain,
         )
     (
-        live._resolved_candidates(F.lit(True))
-        .repartition(live.n_tables << live.bits, "table", "bucket")
+        _clustered(
+            live._resolved_candidates(F.lit(True)),
+            live.n_tables << live.bits, "table", "bucket",
+        )
         .write.mode("overwrite")
         .partitionBy("table", "bucket")
         .parquet(data)
@@ -3669,20 +3848,25 @@ def _shadow_counts(
     counted as shadowable data) and the newest position is 0 by
     construction, exactly the loop semantics. Skips the job entirely
     when no non-tombstone older segment exists (the loops ran no job
-    there either)."""
+    there either). A boolean ``__data`` column, when present, marks
+    which pairs are data: a pair with ``__data`` false (an id a CDC
+    segment only deletes) shadows older positions but is not counted
+    at its own."""
     countable = [
         p for p in positions[:-1] if p not in tomb_positions
     ] if positions else []
     if not countable:
         return [0] * len(positions)
+    data = F.col("__data") if "__data" in pairs_df.columns else F.lit(True)
     rows = (
         pairs_df.groupBy("__id")
-        .agg(F.collect_set("__pos").alias("__ps"))
+        .agg(
+            F.collect_set(F.when(data, F.col("__pos"))).alias("__ps"),
+            F.max("__pos").alias("__mx"),
+        )
         .select(
             F.explode(
-                F.filter(
-                    "__ps", lambda p: p < F.array_max(F.col("__ps"))
-                )
+                F.filter("__ps", lambda p: p < F.col("__mx"))
             ).alias("__pos")
         )
         .groupBy("__pos")
@@ -3706,9 +3890,11 @@ def index_report(spark, root: str) -> DataFrame:
     - ``kind``         — 'data' or 'tombstone' (row-level delete);
     - ``layout``       — 'postings' | 'ann_raw' | 'ann_sq8';
     - ``rows``         — the manifest's per-segment count (-1 for a
-      legacy monolithic base whose count was never recorded);
+      legacy monolithic base whose count was never recorded): a data
+      segment's documents or vectors — a CDC segment's delete ids are
+      not rows — and a tombstone's ids;
     - ``bytes``        — on-disk bytes under the segment dir;
-    - ``shadowed_ids`` — how many of THIS segment's ids a newer
+    - ``shadowed_ids`` — how many of THIS segment's data ids a newer
       segment replaces or deletes: dead weight a fold would drop.
       Serve-time read amplification is the segment count; this
       column is the wasted fraction of it;
@@ -3751,16 +3937,28 @@ def index_report(spark, root: str) -> DataFrame:
         all_ids = spark.read.parquet(os.path.join(root, "ids")).filter(
             F.col("seg").isin(segs)
         )
+        pairs = all_ids.select(
+            F.col("seg").cast("long").alias("__pos"),
+            F.col("id").alias("__id"),
+        )
+        # a CDC segment's ids/ also lists the ids it only deletes: its
+        # data ids are its raw rows
+        mixed = [s for s, d in zip(segs, m.get("seg_deletes", [])) if d]
+        if mixed:
+            pairs = pairs.withColumn(
+                "__data", ~F.col("__pos").isin(mixed)
+            ).unionByName(
+                spark.read.parquet(os.path.join(root, "raw"))
+                .filter(F.col("seg").isin(mixed))
+                .select(
+                    F.col("seg").cast("long").alias("__pos"),
+                    F.col("id").alias("__id"),
+                    F.lit(True).alias("__data"),
+                )
+            )
         # one aggregation job for every segment's shadowed-id count
         # (was one join+count job per older segment — r18)
-        shadowed = _shadow_counts(
-            all_ids.select(
-                F.col("seg").cast("long").alias("__pos"),
-                F.col("id").alias("__id"),
-            ),
-            segs,
-            tomb_set,
-        )
+        shadowed = _shadow_counts(pairs, segs, tomb_set)
         rows = [
             (
                 f"seg={s}",
@@ -3828,10 +4026,13 @@ def index_report(spark, root: str) -> DataFrame:
         layout = "postings"
         paths, counts, tombs = rdr.seg_paths, rdr.seg_n_docs, rdr.seg_tomb
 
-        def seg_ids(p):
-            return spark.read.parquet(p + "/doclens").select("doc_id")
+        def seg_pairs(i, p):
+            # delete markers shadow older segments but are no data
+            return spark.read.parquet(p + "/doclens").select(
+                F.col("doc_id").alias("__id"),
+                _is_doc(F.col("dl")).alias("__data"),
+            )
 
-        id_key = "doc_id"
         drift = [None] * len(paths)
     else:  # ANN layouts (manifest or legacy monolithic sidecar)
         store = _open_ann_version(spark, src)
@@ -3849,8 +4050,20 @@ def index_report(spark, root: str) -> DataFrame:
             )
         layout = "ann_sq8" if getattr(store, "_quant", None) else "ann_raw"
         paths, counts, tombs = store.seg_paths, store.seg_n, store.seg_tomb
-        seg_ids = store._seg_ids
-        id_key = store.id_col
+
+        def seg_pairs(i, p):
+            def tag(df, data):
+                return df.select(
+                    F.col(store.id_col).alias("__id"), F.lit(data).alias("__data")
+                )
+
+            if not store.seg_n_del[i]:
+                return tag(store._seg_ids(p), True)
+            # a CDC segment's ids/ also lists the ids it only deletes
+            return tag(store._seg_ids(p), False).unionByName(
+                tag(store._seg_data_ids(p), True)
+            )
+
         base_bounds = None
         drift = []
         for p, t in zip(paths, tombs):
@@ -3881,9 +4094,8 @@ def index_report(spark, root: str) -> DataFrame:
     # accumulated union — r18)
     pairs = None
     for i, p in enumerate(paths):
-        tagged = seg_ids(p).select(
-            F.lit(i).cast("long").alias("__pos"),
-            F.col(id_key).alias("__id"),
+        tagged = seg_pairs(i, p).select(
+            F.lit(i).cast("long").alias("__pos"), "__id", "__data"
         )
         pairs = tagged if pairs is None else pairs.unionByName(tagged)
     shadowed = _shadow_counts(

@@ -379,6 +379,94 @@ def run_sketch_stream(
     )
 
 
+def _fold_cdc_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    root: str,
+    id_col: str,
+    op_col: str | None,
+    cols: tuple[str, ...] | None,
+    build,
+    commit,
+    compact,
+    root_marker: bool = False,
+) -> None:
+    """The fold every store maintenance stream runs per micro-batch.
+
+    One job classifies the batch: how many rows upsert and how many
+    delete (``op_col == 'delete'``; every row upserts when ``op_col``
+    is None). An empty batch mints nothing. A batch the root's
+    ``_last_batch_id`` marker already covers is a replay and is
+    skipped; the marker sits in the live version directory, or in the
+    root when ``root_marker``. Upsert rows keep ``cols`` (all columns
+    when None) and collapse to one per ``id_col`` (arbitrary winner;
+    in a batch that also deletes, the segment writer's resolve does
+    it in the same shuffle that drops the deleted ids).
+
+    Before the first commit ``build(upserts)`` creates the root from
+    the upserts minus the batch's deletes; a delete-only first batch
+    is a no-op (nothing exists to delete). After it, ``commit(upserts,
+    deletes)`` writes the batch as ONE segment and ONE version (either
+    side None when the batch has none of it). The marker is written
+    next, then ``compact(spark)`` runs the root's auto-compaction
+    trigger, which carries the marker forward."""
+    import os
+
+    from ..functions import similarity as SIM
+
+    is_del = (
+        F.lit(False) if op_col is None
+        else F.coalesce(F.col(op_col) == "delete", F.lit(False))
+    )
+    # coalesce(1): the two counts come from one task, so the global
+    # aggregate needs no exchange and the classification is one job
+    counts = (
+        batch_df.select(is_del.alias("__del"))
+        .coalesce(1)
+        .agg(
+            F.count_if(~F.col("__del")).alias("up"),
+            F.count_if(F.col("__del")).alias("dels"),
+        )
+        .first()
+    )
+    if not counts["up"] and not counts["dels"]:
+        return
+    cur = SIM.index_current_path(root)
+    if cur is not None:
+        try:
+            marker = os.path.join(root if root_marker else cur, "_last_batch_id")
+            with open(marker, encoding="utf-8") as f:
+                if batch_id <= int(f.read().strip()):
+                    return  # replay of an already-folded batch
+        except (OSError, ValueError):
+            pass
+    upserts = dels = None
+    if counts["dels"]:
+        dels = batch_df.filter(is_del).select(id_col)
+    if counts["up"]:
+        upserts = batch_df.filter(~is_del)
+        if cols is not None:
+            upserts = upserts.select(*cols)
+        if dels is None:
+            upserts = upserts.dropDuplicates([id_col])
+        elif cur is None:
+            res = SIM._resolve_cdc(upserts, dels, id_col)
+            upserts = res.filter(~F.col("__del")).drop("__del")
+        # else the segment writer's one resolve shuffle collapses
+        # duplicate ids while it drops the deleted ones
+    if cur is None:
+        if upserts is None:
+            return  # delete-only batch before the first build: no-op
+        build(upserts)
+    else:
+        commit(upserts, dels)
+    marker_dir = root if root_marker else SIM.index_current_path(root)
+    with open(os.path.join(marker_dir, "_last_batch_id"), "w", encoding="utf-8") as f:
+        f.write(str(batch_id))
+    if compact is not None:
+        compact(batch_df.sparkSession)
+
+
 def run_index_maintenance_stream(
     stream: DataFrame,
     root: str,
@@ -429,71 +517,44 @@ def run_index_maintenance_stream(
     upserts inherit geometry from the live version's stats.
 
     ``op_col`` switches the fold to CDC semantics (r14): rows whose
-    ``op_col`` equals ``'delete'`` tombstone their ``id_col`` via
-    ``delete_index_ids`` (row-level delete — the takedown/
-    robots-revocation event arriving ON the same stream as content);
-    every other row upserts as before. Within one batch upserts
-    apply FIRST, deletes second, so a same-id conflict resolves to
-    DELETED — the conservative order for compliance events. Deletes
-    before the first build are no-ops (nothing exists to delete).
-    Replay safety is unchanged: the marker lands on the batch's
-    final version, and both upsert-by-replacement and
-    delete-by-tombstone are idempotent."""
-    import os
-
+    ``op_col`` equals ``'delete'`` delete their ``id_col`` (row-level
+    delete — the takedown/robots-revocation event arriving ON the
+    same stream as content); every other row upserts as before. A
+    batch lands as ONE segment and ONE version
+    (``upsert_postings_index_versioned(delete_ids=...)``): its
+    documents are the upserts minus the ids the batch deletes, and its
+    shadow set is upserts ∪ deletes, so a same-id conflict resolves to
+    DELETED — the conservative order for compliance events — and a
+    reader never sees half a batch. A delete-only batch is a
+    tombstone (``delete_index_ids``). Deletes before the first build
+    are no-ops (nothing exists to delete). Replay safety is
+    unchanged: the marker lands on the batch's version, and the fold
+    is idempotent."""
     from ..functions import similarity as SIM
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if op_col is not None:
-            dels = (
-                batch_df.filter(F.col(op_col) == "delete")
-                .select(id_col)
-                .dropDuplicates()
-            )
-            rows = batch_df.filter(
-                F.col(op_col).isNull() | (F.col(op_col) != "delete")
-            )
+    build_kw: dict = {"text_col": text_col, "id_col": id_col, "positions": positions}
+    if buckets is not None:
+        build_kw["buckets"] = buckets
+
+    def commit(upserts, dels):
+        if upserts is None:
+            SIM.delete_index_ids(dels, root, id_col=id_col)
         else:
-            dels, rows = None, batch_df
-        delta = rows.dropDuplicates([id_col])
-        has_delta = not delta.isEmpty()
-        has_dels = dels is not None and not dels.isEmpty()
-        if not has_delta and not has_dels:
-            return
-        cur = SIM.index_current_path(root)
-        if cur is not None:
-            try:
-                with open(os.path.join(cur, "_last_batch_id"), encoding="utf-8") as f:
-                    if batch_id <= int(f.read().strip()):
-                        return  # replay of an already-folded batch
-            except (OSError, ValueError):
-                pass
-        path = None
-        if has_delta:
-            if cur is not None:
-                path = SIM.upsert_postings_index_versioned(
-                    delta, root, text_col=text_col, id_col=id_col
-                )
-            else:
-                kw: dict = {
-                    "text_col": text_col, "id_col": id_col, "positions": positions
-                }
-                if buckets is not None:
-                    kw["buckets"] = buckets
-                path = SIM.build_postings_index_versioned(delta, root, **kw)
-        if has_dels and SIM.index_current_path(root) is not None:
-            path = SIM.delete_index_ids(dels, root, id_col=id_col)
-        if path is None:
-            return  # delete-only batch before the first build: no-op
-        with open(os.path.join(path, "_last_batch_id"), "w", encoding="utf-8") as f:
-            f.write(str(batch_id))
-        if max_segments is not None:
-            # marker already written above, so the fold carries it into
-            # the compacted version — a restart right after compaction
-            # still skips this batch
-            SIM.maybe_compact_index(
-                batch_df.sparkSession, root, max_segments, retain=retain
+            SIM.upsert_postings_index_versioned(
+                upserts, root, text_col=text_col, id_col=id_col, delete_ids=dels
             )
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        _fold_cdc_batch(
+            batch_df, batch_id, root, id_col, op_col, None,
+            build=lambda up: SIM.build_postings_index_versioned(up, root, **build_kw),
+            commit=commit,
+            compact=None if max_segments is None else (
+                lambda spark: SIM.maybe_compact_index(
+                    spark, root, max_segments, retain=retain
+                )
+            ),
+        )
 
     return (
         stream.writeStream.foreachBatch(fold)
@@ -559,74 +620,46 @@ def run_ann_maintenance_stream(
     ``probe_batch_quantized``.
 
     ``op_col`` switches the fold to CDC semantics (r14, the lexical
-    twin's contract): ``op_col == 'delete'`` rows tombstone their
-    ``id_col`` via ``delete_ann_ids`` (the vector column may be NULL
-    — a takedown event carries only the id); other rows upsert.
-    Upserts apply first, deletes second (a same-id conflict within
-    one batch resolves to DELETED — the conservative order for
-    compliance events); deletes before the first build are no-ops;
-    replay safety unchanged (marker on the batch's final version,
-    both ops idempotent)."""
-    import os
-
+    twin's contract): ``op_col == 'delete'`` rows delete their
+    ``id_col`` (the vector column may be NULL — a takedown event
+    carries only the id); other rows upsert. A batch lands as ONE
+    segment and ONE version (``upsert_ann_store_versioned(
+    delete_ids=...)``): its vectors are the upserts minus the ids the
+    batch deletes and its ``ids/`` sidecar is upserts ∪ deletes, so a
+    same-id conflict within one batch resolves to DELETED — the
+    conservative order for compliance events. A delete-only batch is
+    a tombstone (``delete_ann_ids``); deletes before the first build
+    are no-ops; replay safety unchanged (marker on the batch's
+    version, the fold idempotent)."""
     from ..functions import similarity as SIM
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if op_col is not None:
-            dels = (
-                batch_df.filter(F.col(op_col) == "delete")
-                .select(id_col)
-                .dropDuplicates()
-            )
-            rows = batch_df.filter(
-                F.col(op_col).isNull() | (F.col(op_col) != "delete")
-            )
+    def commit(upserts, dels):
+        if upserts is None:
+            SIM.delete_ann_ids(dels, root)
         else:
-            dels, rows = None, batch_df
-        delta = rows.dropDuplicates([id_col]).select(
-            id_col, vec_col, *metadata_cols
-        )
-        has_delta = not delta.isEmpty()
-        has_dels = dels is not None and not dels.isEmpty()
-        if not has_delta and not has_dels:
-            return
-        cur = SIM.index_current_path(root)
-        if cur is not None:
-            try:
-                with open(os.path.join(cur, "_last_batch_id"), encoding="utf-8") as f:
-                    if batch_id <= int(f.read().strip()):
-                        return  # replay of an already-folded batch
-            except (OSError, ValueError):
-                pass
-        handle = None
-        if has_delta:
-            if cur is not None:
-                handle = SIM.upsert_ann_store_versioned(delta, root)
-            else:
-                handle = SIM.write_ann_store_versioned(
-                    delta,
-                    root,
-                    metadata_cols=metadata_cols,
-                    quantized=quantized,
-                    bits=bits,
-                    n_tables=n_tables,
-                    id_col=id_col,
-                    vec_col=vec_col,
+            SIM.upsert_ann_store_versioned(upserts, root, delete_ids=dels)
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        _fold_cdc_batch(
+            batch_df, batch_id, root, id_col, op_col,
+            (id_col, vec_col, *metadata_cols),
+            build=lambda up: SIM.write_ann_store_versioned(
+                up,
+                root,
+                metadata_cols=metadata_cols,
+                quantized=quantized,
+                bits=bits,
+                n_tables=n_tables,
+                id_col=id_col,
+                vec_col=vec_col,
+            ),
+            commit=commit,
+            compact=None if max_segments is None else (
+                lambda spark: SIM.maybe_compact_ann_store(
+                    spark, root, max_segments, retain=retain
                 )
-        if has_dels and SIM.index_current_path(root) is not None:
-            handle = SIM.delete_ann_ids(dels, root)
-        if handle is None:
-            return  # delete-only batch before the first build: no-op
-        with open(
-            os.path.join(handle.path, "_last_batch_id"), "w", encoding="utf-8"
-        ) as f:
-            f.write(str(batch_id))
-        if max_segments is not None:
-            # marker written first → compaction's marker carry keeps
-            # replay safety across the fold
-            SIM.maybe_compact_ann_store(
-                batch_df.sparkSession, root, max_segments, retain=retain
-            )
+            ),
+        )
 
     return (
         stream.writeStream.foreachBatch(fold)
@@ -656,11 +689,15 @@ def run_pq_maintenance_stream(
     here — the only batch that pays a k-means fit); every later batch
     is an O(delta) frozen-codebook ``upsert_ivfpq_store`` segment —
     replace semantics per id via last-wins shadowing. ``op_col``
-    switches to CDC semantics: ``'delete'`` rows tombstone their id
-    (``delete_ivfpq_ids``; the vector may be NULL), other rows
-    upsert; upserts apply first, deletes second (same-id conflict in
-    one batch resolves DELETED — the compliance-conservative order);
-    deletes before the first build are no-ops.
+    switches to CDC semantics: ``'delete'`` rows delete their id (the
+    vector may be NULL), other rows upsert. A batch lands as ONE
+    segment and ONE version (``upsert_ivfpq_store(delete_ids=...)``):
+    its codes and raw rows are the upserts minus the ids the batch
+    deletes and its ``ids/`` sidecar is upserts ∪ deletes (same-id
+    conflict in one batch resolves DELETED — the
+    compliance-conservative order). A delete-only batch is a
+    tombstone (``delete_ivfpq_ids``); deletes before the first build
+    are no-ops.
 
     Replay safety, two layers as everywhere: a ``_last_batch_id``
     marker in the root skips an already-folded batch, and a replay
@@ -677,69 +714,39 @@ def run_pq_maintenance_stream(
     RE-TRAINS quantizers, so a drifting embedding stream gets its
     codebook refresh exactly when read amplification forces a fold
     anyway."""
-    import os
-
     from ..functions import pq as PQ
-    from ..functions import similarity as SIM
+
+    def commit(upserts, dels):
+        if upserts is None:
+            PQ.delete_ivfpq_ids(dels.sparkSession, root, dels)
+        else:
+            PQ.upsert_ivfpq_store(upserts, root, delete_ids=dels)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if op_col is not None:
-            dels = (
-                batch_df.filter(F.col(op_col) == "delete")
-                .select(id_col)
-                .dropDuplicates()
-            )
-            rows = batch_df.filter(
-                F.col(op_col).isNull() | (F.col(op_col) != "delete")
-            )
-        else:
-            dels, rows = None, batch_df
-        delta = rows.dropDuplicates([id_col]).select(id_col, vec_col)
-        has_delta = not delta.isEmpty()
-        has_dels = dels is not None and not dels.isEmpty()
-        if not has_delta and not has_dels:
-            return
-        spark = batch_df.sparkSession
         # a pre-r15 monolithic root (_pq_meta.json, no CURRENT) must
         # refuse loudly here, not read as 'never built' and be
         # silently base-built over (r15 ADVICE)
         PQ._refuse_legacy_pq_root(root)
-        built = SIM.index_current_path(root) is not None
-        marker = os.path.join(root, "_last_batch_id")
-        if built:
-            try:
-                with open(marker, encoding="utf-8") as f:
-                    if batch_id <= int(f.read().strip()):
-                        return  # replay of an already-folded batch
-            except (OSError, ValueError):
-                pass
-        folded = False
-        if has_delta:
-            if built:
-                PQ.upsert_ivfpq_store(delta, root)
-            else:
-                PQ.write_ivfpq_store(
-                    delta,
-                    root,
-                    n_cells=n_cells,
-                    m=m,
-                    k_pq=k_pq,
-                    max_fit_rows=max_fit_rows,
-                    id_col=id_col,
-                    vec_col=vec_col,
-                )
-            folded = True
-        if has_dels and SIM.index_current_path(root) is not None:
-            PQ.delete_ivfpq_ids(spark, root, dels)
-            folded = True
-        if not folded:
-            return  # delete-only batch before the first build: no-op
-        with open(marker, "w", encoding="utf-8") as f:
-            f.write(str(batch_id))
-        if max_segments is not None:
+        _fold_cdc_batch(
+            batch_df, batch_id, root, id_col, op_col, (id_col, vec_col),
+            build=lambda up: PQ.write_ivfpq_store(
+                up,
+                root,
+                n_cells=n_cells,
+                m=m,
+                k_pq=k_pq,
+                max_fit_rows=max_fit_rows,
+                id_col=id_col,
+                vec_col=vec_col,
+            ),
+            commit=commit,
             # marker is root-level and the root never moves — replay
             # safety holds across the in-place fold with no carry
-            PQ.maybe_compact_ivfpq_store(spark, root, max_segments)
+            compact=None if max_segments is None else (
+                lambda spark: PQ.maybe_compact_ivfpq_store(spark, root, max_segments)
+            ),
+            root_marker=True,
+        )
 
     return (
         stream.writeStream.foreachBatch(fold)
